@@ -120,6 +120,29 @@ object Bench {
     if (new java.io.File(detailPath).getName == "bench_detail.json") detailPath
     else env.getOrElse("SPARK_GRAFT_ATTR_PRIOR", "bench_detail.json")
 
+  /** A JSON number with `decimals` places, independent of the default
+    * locale (a `de_DE` default would print a decimal comma).
+    */
+  private[graft] def num(v: Double, decimals: Int = 3): String =
+    s"%.${decimals}f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** (prior, write) paths of the per-query detail file. The re-pass
+    * prior reads the committed `bench_detail.json`
+    * (`bench_detail_subset.json` for a BENCH_ONLY subset run) and the
+    * fresh detail is written under `scratchDir`, so a default run never
+    * rewrites a tracked file. `SPARK_GRAFT_BENCH_DETAIL` names one path
+    * for both — set it to the committed file to update the prior.
+    */
+  private[graft] def detailPaths(subset: Boolean, scratchDir: String,
+      env: Map[String, String] = sys.env): (String, String) = {
+    val committed =
+      if (subset) "bench_detail_subset.json" else "bench_detail.json"
+    env.get("SPARK_GRAFT_BENCH_DETAIL") match {
+      case Some(p) => (p, p)
+      case None => (committed, new java.io.File(scratchDir, committed).getPath)
+    }
+  }
+
   /** Tail-survivable per-query records (the r19 verdict's item #2): the
     * caller that collects this program's output keeps only the LAST ~2000
     * characters of stdout, which beheads the multi-KB `"metric":"total"`
@@ -135,7 +158,7 @@ object Bench {
                                      sfJson: String,
                                      maxChunkBytes: Int = 700): Seq[String] = {
     val entries = times.sortBy { case (k, v) => (v, k) }
-      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
+      .map { case (k, v) => "\"" + k + "\":" + num(v) }
     val packed = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
     var cur = Vector.empty[String]
     var curLen = 0
@@ -288,16 +311,15 @@ object Bench {
       calibRuns += calibrate()
       calibMcRuns += calibrateMC(cpuN)
     }
-    // A subset (BENCH_ONLY) run must not clobber the committed detail
-    // file: it became load-bearing input this round (the re-pass reads
-    // it as the prior-round reference), and a 1-query overwrite would
-    // silently disarm the contention defense for every other query on
-    // the next official sweep. Explicit SPARK_GRAFT_BENCH_DETAIL wins.
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      if (only.isDefined) "bench_detail_subset.json" else "bench_detail.json")
+    // The committed detail files are load-bearing input (the re-pass
+    // reads them as the prior-round reference): only an explicit
+    // SPARK_GRAFT_BENCH_DETAIL rewrites one (see detailPaths)
+    val (detailPath, detailOut) = detailPaths(only.isDefined,
+      spark.conf.getOption("spark.local.dir").map(_.split(",").head.trim)
+        .getOrElse(System.getProperty("java.io.tmpdir")))
     // Targeted re-pass: a query whose best-so-far reads far above its
-    // PRIOR-ROUND minimum (from the committed detail file, read before
-    // this run overwrites it) is contention-suspect — on identical code
+    // PRIOR-ROUND minimum (from the committed detail file) is
+    // contention-suspect — on identical code
     // the true per-round delta is never 2x on a quiet box. Each suspect
     // gets ONE more measurement, worst-relative-inflation first, budget-
     // gated: the r16 sweep would have re-run the 86 queries it left
@@ -362,7 +384,7 @@ object Bench {
       val good = runs.filter(_._2)
       name -> ((if (good.nonEmpty) good else runs).map(_._1).min, runs.size)
     }
-    val qs = results.map { case (k, (v, _)) => "\"" + k + f"""":$v%.3f""" }
+    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     val passCounts = results.map { case (k, (_, n)) => "\"" + k + s"""":$n""" }
       .mkString("{", ",", "}")
@@ -399,8 +421,7 @@ object Bench {
     }
     val (calibRatio, calibMcRatio, codeRatio) = attributionRatios(
       sharedPairs, calib, calibMc, attrRef.calib, attrRef.calibMc)
-    def jnum(o: Option[Double]): String =
-      o.map(v => f"$v%.3f").getOrElse("null")
+    def jnum(o: Option[Double]): String = o.map(num(_)).getOrElse("null")
     val attribution = s""""calib_ratio":${jnum(calibRatio)},""" +
       s""""calib_mc_ratio":${jnum(calibMcRatio)},""" +
       s""""code_ratio":${jnum(codeRatio)}"""
@@ -414,20 +435,19 @@ object Bench {
       sweeps.flatMap(_.get(name)).count(_._2)
     }.minOption.getOrElse(0)
     val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"${jq(sfDir)}","passes":$passes,"method":"min-of-$passes%d-sweeps","calib_secs":$calib%.3f,"calib_mc_secs":$calibMc%.3f,"mc_over_st":$stealRatio%.2f,$attribution,"scratch_dir":"$scratchDir","min_passes":$minPassesRun,"extra_passes":$extraPasses,"passes_run":$passCounts,"budget_skipped":$truncated}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"sf":"${jq(sfDir)}","passes":$passes,"method":"min-of-$passes-sweeps","calib_secs":${num(calib)},"calib_mc_secs":${num(calibMc)},"mc_over_st":${num(stealRatio, 2)},$attribution,"scratch_dir":"$scratchDir","min_passes":$minPassesRun,"extra_passes":$extraPasses,"passes_run":$passCounts,"budget_skipped":$truncated}"""
     println(fullJson)
-    // Durable copy: the driver's BENCH_r*.json capture keeps only a
-    // 2000-char stdout tail, so per-query times beyond worst5 are lost
-    // each round. Overwrite the repo-local detail file (read above as
-    // the prior-round reference) with the full map so round-over-round
-    // forensics never need a solo re-bench.
+    // Durable copy: a capture that keeps only a 2000-char stdout tail
+    // loses per-query times beyond worst5, so the full map also goes to
+    // the detail file (scratch by default, see detailPaths) and
+    // round-over-round forensics never need a solo re-bench.
     // Detail-only extras: the full per-pass time vector per query (in
     // pass order — only the min survives into `queries`), which passes
     // failed (usually none), and the calibration-probe vectors bracketing
     // the sweeps (index 0 = before warmup, index i = after sweep i).
     val passTimes = ordered.map { case (name, _) =>
       "\"" + name + "\":" + sweeps.flatMap(_.get(name))
-        .map(r => f"${r._1}%.3f").mkString("[", ",", "]")
+        .map(r => num(r._1)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val passFails = ordered.flatMap { case (name, _) =>
       val runs = sweeps.flatMap(_.get(name))
@@ -435,13 +455,15 @@ object Bench {
       else Some("\"" + name + "\":" +
         runs.map(r => if (r._2) "true" else "false").mkString("[", ",", "]"))
     }.mkString("{", ",", "}")
-    val calibVec = calibRuns.map(v => f"$v%.3f").mkString("[", ",", "]")
-    val calibMcVec = calibMcRuns.map(v => f"$v%.3f").mkString("[", ",", "]")
+    val calibVec = calibRuns.map(num(_)).mkString("[", ",", "]")
+    val calibMcVec = calibMcRuns.map(num(_)).mkString("[", ",", "]")
     val detailJson = fullJson.dropRight(1) +
       s""","pass_times":$passTimes,"pass_fails":$passFails,"calib_passes":$calibVec,"calib_mc_passes":$calibMcVec}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      (detailJson + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(e) =>
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(detailOut),
+        (detailJson + "\n").getBytes("UTF-8"))
+      System.err.println(s"[bench] per-query detail written to $detailOut")
+    } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}")
     }
     // Second, SHORT summary line printed AFTER the full one: the capture
@@ -451,7 +473,7 @@ object Bench {
     // survive whole, so the headline total and the worst offenders are
     // never lost to the capture window.
     val worst5 = results.sortBy(-_._2._1).take(5)
-      .map { case (k, (v, _)) => "\"" + k + f"""":$v%.3f""" }
+      .map { case (k, (v, _)) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     // Box-noise gauge: median of each query's (max/min) across the
     // sweeps that ran it more than once. ~1.0 = quiet box, the reported
@@ -464,7 +486,7 @@ object Bench {
     val noise =
       if (spreads.isEmpty) 1.0 else spreads(spreads.size / 2)
     val compactLine =
-      f"""{"metric":"total_compact","value":$total%.3f,"unit":"sec","n_queries":${results.size}%d,"sweep_noise_median":$noise%.2f,"calib_secs":$calib%.3f,"calib_mc_secs":$calibMc%.3f,"mc_over_st":$stealRatio%.2f,$attribution,"min_passes":$minPassesRun,"extra_passes":$extraPasses,"scratch_dir":"$scratchDir","worst5":$worst5}"""
+      s"""{"metric":"total_compact","value":${num(total)},"unit":"sec","n_queries":${results.size},"sweep_noise_median":${num(noise, 2)},"calib_secs":${num(calib)},"calib_mc_secs":${num(calibMc)},"mc_over_st":${num(stealRatio, 2)},$attribution,"min_passes":$minPassesRun,"extra_passes":$extraPasses,"scratch_dir":"$scratchDir","worst5":$worst5}"""
     println(compactLine)
     // Per-query records in tail-survivable form (see [[queryChunkLines]]),
     // then the compact summary ONCE MORE as the very last line: the

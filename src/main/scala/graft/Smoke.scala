@@ -63,7 +63,8 @@ object Smoke {
     val mask = MaskDef(clearData = Seq(0, 1), notClearData = Seq(2, 3, 4), nodata = 255)
 
     val scanned = RasterIO.scanDirectory(spark, dir.toString)
-    val blocks = RasterIO.decodeBlocks(scanned, "smoke", "t1", blockSize = 32)
+    val blocks = RasterIO.failOnDecodeError(RasterIO.decodeBlocksQuarantining(
+        scanned.withColumn("tile", lit("t1")), "smoke", blockSize = 32))
       .withColumn("assetOrder", lit(0)).withColumn("source", lit(0))
     val merged = CubeBuilder.merge(blocks.filter(col("band") =!= "QA"),
         nodata, combined = true)

@@ -69,17 +69,22 @@ object CubeBuilder {
                 priority: Column = lit(1.0),
                 sourceIdx: Column = lit(0),
                 applyValidRange: Boolean = false): DataFrame = {
-    val spark = merged.sparkSession
-    import spark.implicits._
-    val qualityMerged = merged.filter($"band" === collection.qualityBand)
-    val radsat =
-      if (mask.saturatedBand.nonEmpty)
-        Some(merged.filter($"band" === mask.saturatedBand))
-      else None
-    val spectral = merged.filter($"band" =!= collection.qualityBand &&
-      (if (mask.saturatedBand.nonEmpty) $"band" =!= mask.saturatedBand else lit(true)))
-    compositeSlices(spectral, qualityMerged, radsat, periods, collection,
+    val (spectral, quality, radsat) = bandSlices(merged, collection, mask)
+    compositeSlices(spectral, quality, radsat, periods, collection,
       mask, priority, sourceIdx, applyValidRange)
+  }
+
+  /** Split a block table into the slices [[compositeSlices]] takes: the
+    * spectral bands, the quality band, and the mask's saturated (RADSAT)
+    * band when it names one.
+    */
+  private[graft] def bandSlices(blocks: DataFrame, collection: Collection,
+      mask: MaskDef): (DataFrame, DataFrame, Option[DataFrame]) = {
+    val satBand = Option(mask.saturatedBand).filter(_.nonEmpty)
+    (blocks.filter(col("band") =!= collection.qualityBand &&
+        satBand.map(col("band") =!= _).getOrElse(lit(true))),
+      blocks.filter(col("band") === collection.qualityBand),
+      satBand.map(sb => blocks.filter(col("band") === sb)))
   }
 
   /** [[composite]] over pre-split slices. Taking the spectral and quality
@@ -193,24 +198,6 @@ object CubeBuilder {
     }
   }
 
-  /** Composite with efficacy-derived scene ordering: computes T1
-    * priorities from the merged quality band and runs [[composite]] with
-    * them (the reference's prepare-blend ordering).
-    */
-  def compositeByEfficacy(merged: DataFrame, periods: DataFrame,
-                          collection: Collection, mask: MaskDef,
-                          resolution: Double,
-                          referenceDay: Option[Int] = None,
-                          applyValidRange: Boolean = false): DataFrame = {
-    val spark = merged.sparkSession
-    import spark.implicits._
-    val prio = scenePriorities(merged, collection, mask, resolution, referenceDay)
-    val withPrio = merged.join(broadcast(prio), Seq("tileId", "date"), "left")
-      .withColumn("scene_priority", coalesce($"scene_priority", lit(0.0)))
-    composite(withPrio, periods, collection, mask,
-      priority = $"scene_priority", applyValidRange = applyValidRange)
-  }
-
   /** Select the output pixel array for the collection's composite function. */
   def compositeBand(collection: Collection): Column =
     graft.model.CompositeFunction.parse(collection.compositeFunction) match {
@@ -285,13 +272,6 @@ object CubeBuilder {
         $"xmin", $"ymin", $"xmax", $"ymax", $"clear_pct")
   }
 
-  /** T10 — histogram-match each scene-date's merged band to the
-    * best-priority date of its (tile, band) group before compositing
-    * (reference `tasks.py:368-385`). The value→matched mapping (one small
-    * table per (tile, band, date)) is collected into a map column and
-    * applied to the pixel arrays with a codegen'd `transform` — no
-    * explode/regroup of pixel payloads.
-    */
   /** Per-block value→count histograms of `(tileId, band, date, pixels,
     * nodata)` rows: the T10 shuffle reducer. The explode emits
     * ≤ |distinct sample values| rows per block (int16 imagery ⇒ ≤65k)
@@ -308,6 +288,13 @@ object CubeBuilder {
         $"vc.value".as("value"), $"vc.cnt".as("cnt"))
   }
 
+  /** T10 — histogram-match each scene-date's merged band to the
+    * best-priority date of its (tile, band) group before compositing
+    * (reference `tasks.py:368-385`). The value→matched mapping (one small
+    * table per (tile, band, date)) is collected into a map column and
+    * applied to the pixel arrays with a codegen'd `transform` — no
+    * explode/regroup of pixel payloads.
+    */
   def histogramMatchScenes(merged: DataFrame, priority: Column,
                            qualityBand: String): DataFrame = {
     val spark = merged.sparkSession

@@ -44,98 +44,17 @@ object CubeRun {
                                * pending and re-plan on the next run */
                              errors: Long = 0L)
 
-  def run(spark: SparkSession,
-          collection: Collection,
-          mask: MaskDef,
-          sceneDir: String,
-          outDir: String,
-          tileId: String,
-          start: java.time.LocalDate,
-          end: java.time.LocalDate,
-          force: Boolean = false,
-          blockSize: Int = 512,
-          blockBuckets: Int = 32,
-          /** keep the scratch bucketed-block table + files after the
-            * run (debugging/inspection); default drops them — the
-            * layout is intra-run scratch and would otherwise accumulate
-            * a full decoded data copy per outDir */
-          keepBucketed: Boolean = false,
-          /** also publish composite+index bands as COG items under
-            * `outDir/data` via the crash-safe work→data commit
-            * ([[Publish.publishGeoTiffs]]) */
-          publishCogs: Boolean = false,
-          /** with [[publishCogs]]: also stage an S11 quicklook PNG per
-            * item (requires `collection.quicklook` RGB band names),
-            * scaled over this (inMin, inMax) display range */
-          quicklookRange: Option[(Double, Double)] = None,
-          /** T1 scene ordering: blend clearer scenes first instead of
-            * the later-date default (see [[mergeCompositeChain]]) */
-          efficacyPriority: Boolean = false,
-          /** T1 reference-day mode: prefer scenes closest to this
-            * day-of-period, efficacy as tie-break */
-          referenceDay: Option[Int] = None,
-          /** T10: histogram-match every scene to the best-priority
-            * scene per (tile, band) before compositing (the cube's
-            * `histogram_matching` parameter; implies [[efficacyPriority]]) */
-          histogramMatching: Boolean = false,
-          /** Event-time watermark for ALWAYS-ON ingestion
-            * ([[CubeStream]]): only periods with `p_end < horizon`
-            * are expected (STRICT — a scene dated exactly `p_end` may
-            * still be mid-arrival when its first file lands), so an
-            * open period — one scenes can still arrive for — is never
-            * composited early or ledgered SUCCESS with a partial scene
-            * set. None (batch builds): every period in [start, end] is
-            * expected. */
-          horizon: Option[java.time.LocalDate] = None,
-          /** scene-scan filename conventions, forwarded to
-            * [[RasterIO.scanDirectory]] (drivers differ; defaults
-            * match the reference's band/date naming) */
-          glob: String = "*.tif*",
-          bandPattern: String = RasterIO.DefaultBandPattern,
-          datePattern: String = RasterIO.DefaultDatePattern): RunResult =
-    runImpl(spark, collection, mask, sceneDir, outDir, Left(tileId), start,
-      end, force, blockSize, blockBuckets, keepBucketed, publishCogs,
-      quicklookRange, efficacyPriority, referenceDay, histogramMatching,
-      horizon, glob, bandPattern, datePattern)
+  /** Which tile each scanned scene file belongs to. */
+  sealed trait Tiles
+  object Tiles {
+    /** Every scanned file belongs to this one tile. */
+    final case class Fixed(tileId: String) extends Tiles
+    /** Each file's tile is capture group 1 of `pattern` over its file
+      * name, and the scanned directory defines the tile set. */
+    final case class FromName(pattern: String = "_(T[0-9A-Za-z]+)_")
+      extends Tiles
+  }
 
-  /** Multi-tile orchestration (the reference Maestro dispatches one unit
-    * per (tile, period); here ONE declarative chain carries every tile —
-    * the bucketed (tileId, blockY, blockX) layout co-locates each tile's
-    * lifecycle, so tiles parallelize across the cluster without
-    * per-tile jobs). Tiles are read from the scene FILENAMES via
-    * `tilePattern` (capture group 1), the scan is metadata-only, and the
-    * ledger plans pending = expected ∖ done per (tile, period, band) —
-    * a new tile dropped into the directory backfills alone on re-run.
-    */
-  def runTiles(spark: SparkSession,
-               collection: Collection,
-               mask: MaskDef,
-               sceneDir: String,
-               outDir: String,
-               start: java.time.LocalDate,
-               end: java.time.LocalDate,
-               tilePattern: String = "_(T[0-9A-Za-z]+)_",
-               force: Boolean = false,
-               blockSize: Int = 512,
-               blockBuckets: Int = 32,
-               keepBucketed: Boolean = false,
-               publishCogs: Boolean = false,
-               quicklookRange: Option[(Double, Double)] = None,
-               efficacyPriority: Boolean = false,
-               referenceDay: Option[Int] = None,
-               histogramMatching: Boolean = false,
-               horizon: Option[java.time.LocalDate] = None,
-               glob: String = "*.tif*",
-               bandPattern: String = RasterIO.DefaultBandPattern,
-               datePattern: String = RasterIO.DefaultDatePattern): RunResult =
-    runImpl(spark, collection, mask, sceneDir, outDir, Right(tilePattern),
-      start, end, force, blockSize, blockBuckets, keepBucketed, publishCogs,
-      quicklookRange, efficacyPriority, referenceDay, histogramMatching,
-      horizon, glob, bandPattern, datePattern)
-
-  /** `tileSpec`: Left(tileId) assigns every scanned file to one tile;
-    * Right(pattern) extracts each file's tile from its name.
-    */
   /** Scene-geometry probe for the sizing advisory: max dims over the
     * first <=16 DECODABLE TIFF headers, not the first one — a
     * mixed-platform scene dir (10 m Sentinel + 30 m Landsat in one run,
@@ -171,27 +90,67 @@ object CubeRun {
     best
   }
 
-  private def runImpl(callerSession: SparkSession,
-          collection: Collection,
-          mask: MaskDef,
-          sceneDir: String,
-          outDir: String,
-          tileSpec: Either[String, String],
-          start: java.time.LocalDate,
-          end: java.time.LocalDate,
-          force: Boolean,
-          blockSize: Int,
-          blockBuckets: Int,
-          keepBucketed: Boolean,
-          publishCogs: Boolean,
-          quicklookRange: Option[(Double, Double)],
-          efficacyPriority: Boolean,
-          referenceDay: Option[Int],
-          histogramMatching: Boolean,
-          horizon: Option[java.time.LocalDate] = None,
-          glob: String = "*.tif*",
-          bandPattern: String = RasterIO.DefaultBandPattern,
-          datePattern: String = RasterIO.DefaultDatePattern): RunResult = {
+  /** Build the cube at `outDir` from the scenes in `sceneDir` for the
+    * periods of [start, end]. The reference Maestro dispatches one unit
+    * per (tile, period); here ONE declarative chain carries every tile —
+    * the bucketed (tileId, blockY, blockX) layout co-locates each tile's
+    * lifecycle, so tiles parallelize across the cluster without
+    * per-tile jobs. With [[Tiles.FromName]] (the default) tiles are read
+    * from the scene FILENAMES, the scan is metadata-only, and the
+    * ledger plans pending = expected ∖ done per (tile, period, band) —
+    * a new tile dropped into the directory backfills alone on re-run.
+    * [[Tiles.Fixed]] assigns every scanned file to one tile.
+    */
+  def runTiles(callerSession: SparkSession,
+               collection: Collection,
+               mask: MaskDef,
+               sceneDir: String,
+               outDir: String,
+               start: java.time.LocalDate,
+               end: java.time.LocalDate,
+               tiles: Tiles = Tiles.FromName(),
+               force: Boolean = false,
+               blockSize: Int = 512,
+               blockBuckets: Int = 32,
+               /** keep the scratch bucketed-block table + files after the
+                 * run (debugging/inspection); default drops them — the
+                 * layout is intra-run scratch and would otherwise
+                 * accumulate a full decoded data copy per outDir */
+               keepBucketed: Boolean = false,
+               /** also publish composite+index bands as COG items under
+                 * `outDir/data` via the crash-safe work→data commit
+                 * ([[Publish.publishGeoTiffs]]) */
+               publishCogs: Boolean = false,
+               /** with [[publishCogs]]: also stage an S11 quicklook PNG
+                 * per item (requires `collection.quicklook` RGB band
+                 * names), scaled over this (inMin, inMax) display range */
+               quicklookRange: Option[(Double, Double)] = None,
+               /** T1 scene ordering: blend clearer scenes first instead
+                 * of the later-date default (see [[mergeCompositeChain]]) */
+               efficacyPriority: Boolean = false,
+               /** T1 reference-day mode: prefer scenes closest to this
+                 * day-of-period, efficacy as tie-break */
+               referenceDay: Option[Int] = None,
+               /** T10: histogram-match every scene to the best-priority
+                 * scene per (tile, band) before compositing (the cube's
+                 * `histogram_matching` parameter; implies
+                 * [[efficacyPriority]]) */
+               histogramMatching: Boolean = false,
+               /** Event-time watermark for ALWAYS-ON ingestion
+                 * ([[CubeStream]]): only periods with `p_end < horizon`
+                 * are expected (STRICT — a scene dated exactly `p_end`
+                 * may still be mid-arrival when its first file lands), so
+                 * an open period — one scenes can still arrive for — is
+                 * never composited early or ledgered SUCCESS with a
+                 * partial scene set. None (batch builds): every period in
+                 * [start, end] is expected. */
+               horizon: Option[java.time.LocalDate] = None,
+               /** scene-scan filename conventions, forwarded to
+                 * [[RasterIO.scanDirectory]] (drivers differ; defaults
+                 * match the reference's band/date naming) */
+               glob: String = RasterIO.DefaultGlob,
+               bandPattern: String = RasterIO.DefaultBandPattern,
+               datePattern: String = RasterIO.DefaultDatePattern): RunResult = {
     // The bucketed (tileId, blockY, blockX) layout carries every
     // downstream stage shuffle-free — but the spectral↔quality join
     // (keys + date) only rides SUBSET-key co-partitioning when the
@@ -253,7 +212,6 @@ object CubeRun {
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       graft.operators.Scale.CompositeAggInFlightBuffers.toString)
     import spark.implicits._
-    {
 
     // with a horizon (streaming ingestion), only CLOSED periods are
     // expected: p_end < horizon (STRICT) means a scene STRICTLY newer
@@ -285,21 +243,22 @@ object CubeRun {
     spark.catalog.refreshByPath(sceneDir)
     val scannedAll = RasterIO.scanDirectory(spark, sceneDir,
       bandPattern = bandPattern, datePattern = datePattern, glob = glob)
-    val scannedTiled = tileSpec match {
-      case Left(t) => scannedAll.withColumn("tile", lit(t))
-      case Right(p) =>
+    val scannedTiled = tiles match {
+      case Tiles.Fixed(t) => scannedAll.withColumn("tile", lit(t))
+      case Tiles.FromName(p) =>
         // a pattern with no capture group extracts "" from EVERY file and
         // the filter below would silently drop the whole archive
         require(java.util.regex.Pattern.compile(p).matcher("").groupCount() >= 1,
-          s"tilePattern must have a capture group for the tile id: $p")
+          s"Tiles.FromName pattern must have a capture group for the tile id: $p")
         scannedAll
         .withColumn("tile",
           regexp_extract(element_at(split($"path", "/"), -1), p, 1))
         .filter($"tile" =!= "")
     }
-    val tilesDf = tileSpec match {
-      case Left(t)  => Seq(t).toDF("tile_id")
-      case Right(_) => scannedTiled.select($"tile".as("tile_id")).distinct()
+    val tilesDf = tiles match {
+      case Tiles.Fixed(t)    => Seq(t).toDF("tile_id")
+      case Tiles.FromName(_) =>
+        scannedTiled.select($"tile".as("tile_id")).distinct()
     }
 
     val bandNames = collection.bands.filter(_.expression.isEmpty).map(_.name)
@@ -728,13 +687,12 @@ object CubeRun {
       Ledger.readCurrent(spark, s"$outDir/items").map(_.count()).getOrElse(0L),
       readParquetIfExists(spark, s"$outDir/blocks").map(_.count()).getOrElse(0L),
       errorCount))
-    }
   }
 
   /** Stages 1-2 of a run — per-band-slice merge then compositeSlices —
     * over an already-decoded block table. Exposed (package-private) so
     * the plan gate can pin the zero-Exchange property on the EXACT
-    * production chain `run` executes: when `blocks` comes from a table
+    * production chain `runTiles` executes: when `blocks` comes from a table
     * bucketed on (tileId, blockY, blockX), this whole chain must plan
     * with no shuffle after the scan (default flags; the priority branch
     * adds ONE (tile, date)-bounded partial-agg exchange for the T1
@@ -761,16 +719,12 @@ object CubeRun {
     import blocks.sparkSession.implicits._
     val nodata = collection.bands.find(_.name != collection.qualityBand)
       .map(_.nodata.toInt).getOrElse(-9999)
-    val satBand = Option(mask.saturatedBand).filter(_.nonEmpty)
-    val spectralMerged = CubeBuilder.merge(
-      blocks.filter($"band" =!= collection.qualityBand &&
-        satBand.map($"band" =!= _).getOrElse(lit(true))),
-      nodata, combined = true)
-    val qualityMerged = CubeBuilder.merge(
-      blocks.filter($"band" === collection.qualityBand),
-      mask.nodata.toInt, combined = true)
-    val radsatMerged = satBand.map(sb =>
-      CubeBuilder.merge(blocks.filter($"band" === sb), nodata, combined = true))
+    val (spectral, quality, radsat) =
+      CubeBuilder.bandSlices(blocks, collection, mask)
+    val spectralMerged = CubeBuilder.merge(spectral, nodata, combined = true)
+    val qualityMerged = CubeBuilder.merge(quality, mask.nodata.toInt,
+      combined = true)
+    val radsatMerged = radsat.map(CubeBuilder.merge(_, nodata, combined = true))
     val needPrio = efficacyPriority || referenceDay.isDefined ||
       histogramMatching
     val (spectralIn, prioCol) =

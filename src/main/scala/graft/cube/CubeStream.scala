@@ -23,7 +23,7 @@ import graft.model.{Collection, MaskDef}
   * early or marked done with a partial scene set; it becomes pending
   * in the batch whose horizon closes it. Scenes arriving later than
   * `latenessDays` behind the front miss their period (the standard
-  * watermark trade-off); a manual `CubeRun.run(force = true)` over the
+  * watermark trade-off); a manual `CubeRun.runTiles(force = true)` over the
   * affected range recovers them — PAUSE the stream for that run: the
   * ledger is single-logical-writer (concurrent committers never corrupt
   * a version on disk, but the pointer flip is last-write-wins — the
@@ -50,45 +50,11 @@ import graft.model.{Collection, MaskDef}
   */
 object CubeStream {
 
-  /** Watch `sceneDir` and keep the single-tile cube at `outDir` current.
-    * Mirrors [[CubeRun.run]]'s parameters; each batch with at least one
-    * new dated scene file triggers one horizon-bounded run.
-    */
-  def ingest(spark: SparkSession,
-             collection: Collection,
-             mask: MaskDef,
-             sceneDir: String,
-             outDir: String,
-             tileId: String,
-             start: java.time.LocalDate,
-             end: java.time.LocalDate,
-             trigger: Trigger = Trigger.ProcessingTime("1 minute"),
-             blockSize: Int = 512,
-             blockBuckets: Int = 32,
-             latenessDays: Int = 0,
-             glob: String = graft.sources.RasterIO.DefaultGlob,
-             bandPattern: String = graft.sources.RasterIO.DefaultBandPattern,
-             datePattern: String = graft.sources.RasterIO.DefaultDatePattern,
-             publishCogs: Boolean = false,
-             quicklookRange: Option[(Double, Double)] = None,
-             efficacyPriority: Boolean = false,
-             referenceDay: Option[Int] = None,
-             histogramMatching: Boolean = false): StreamingQuery =
-    start0(spark, sceneDir, outDir, trigger, glob, bandPattern,
-      datePattern, latenessDays) { h =>
-      CubeRun.run(spark, collection, mask, sceneDir, outDir, tileId,
-        start, end, blockSize = blockSize, blockBuckets = blockBuckets,
-        publishCogs = publishCogs, quicklookRange = quicklookRange,
-        efficacyPriority = efficacyPriority, referenceDay = referenceDay,
-        histogramMatching = histogramMatching, horizon = Some(h),
-        glob = glob, bandPattern = bandPattern,
-        datePattern = datePattern): Unit
-    }
-
-  /** Watch `sceneDir` and keep the multi-tile cube at `outDir` current;
-    * tiles are read from filenames via `tilePattern` exactly as in
-    * [[CubeRun.runTiles]] — a new tile landing in the directory
-    * backfills alone in its batch.
+  /** Watch `sceneDir` and keep the cube at `outDir` current; `tiles`
+    * assigns scene files to tiles exactly as in [[CubeRun.runTiles]] — a
+    * new tile landing in the directory backfills alone in its batch.
+    * Each batch with at least one new dated scene file triggers one
+    * horizon-bounded run.
     */
   def ingestTiles(spark: SparkSession,
                   collection: Collection,
@@ -97,7 +63,7 @@ object CubeStream {
                   outDir: String,
                   start: java.time.LocalDate,
                   end: java.time.LocalDate,
-                  tilePattern: String = "_(T[0-9A-Za-z]+)_",
+                  tiles: CubeRun.Tiles = CubeRun.Tiles.FromName(),
                   trigger: Trigger = Trigger.ProcessingTime("1 minute"),
                   blockSize: Int = 512,
                   blockBuckets: Int = 32,
@@ -110,22 +76,6 @@ object CubeStream {
                   efficacyPriority: Boolean = false,
                   referenceDay: Option[Int] = None,
                   histogramMatching: Boolean = false): StreamingQuery =
-    start0(spark, sceneDir, outDir, trigger, glob, bandPattern,
-      datePattern, latenessDays) { h =>
-      CubeRun.runTiles(spark, collection, mask, sceneDir, outDir,
-        start, end, tilePattern = tilePattern, blockSize = blockSize,
-        blockBuckets = blockBuckets, publishCogs = publishCogs,
-        quicklookRange = quicklookRange,
-        efficacyPriority = efficacyPriority, referenceDay = referenceDay,
-        histogramMatching = histogramMatching, horizon = Some(h),
-        glob = glob, bandPattern = bandPattern,
-        datePattern = datePattern): Unit
-    }
-
-  private def start0(spark: SparkSession, sceneDir: String, outDir: String,
-                     trigger: Trigger, glob: String, bandPattern: String,
-                     datePattern: String, latenessDays: Int)
-                    (runTo: java.time.LocalDate => Unit): StreamingQuery =
     spark.readStream.format("binaryFile")
       .option("pathGlobFilter", glob)
       // streaming sources demand an explicit schema; binaryFile's is
@@ -161,8 +111,17 @@ object CubeStream {
               glob = glob)
             .agg(max(col("date"))).collect().head
           if (!maxDate.isNullAt(0))
-            runTo(maxDate.getDate(0).toLocalDate
-              .minusDays(latenessDays.toLong))
+            CubeRun.runTiles(spark, collection, mask, sceneDir, outDir,
+              start, end, tiles = tiles, blockSize = blockSize,
+              blockBuckets = blockBuckets, publishCogs = publishCogs,
+              quicklookRange = quicklookRange,
+              efficacyPriority = efficacyPriority,
+              referenceDay = referenceDay,
+              histogramMatching = histogramMatching,
+              horizon = Some(maxDate.getDate(0).toLocalDate
+                .minusDays(latenessDays.toLong)),
+              glob = glob, bandPattern = bandPattern,
+              datePattern = datePattern): Unit
         }
       }
       .trigger(trigger)

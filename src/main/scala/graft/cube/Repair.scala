@@ -206,7 +206,7 @@ object Repair {
     * ledger rows to ERROR (pointer-versioned commit — the downgrade is
     * atomic and survives a crash mid-repair; a re-run of the repair is
     * idempotent). Returns the number of dirs repaired. The next
-    * [[CubeRun.run]] re-plans exactly those (tile, period) units and
+    * [[CubeRun.runTiles]] re-plans exactly those (tile, period) units and
     * republishes them from source.
     *
     * `tornUnits` lets a caller that has ALREADY collected the plan (the

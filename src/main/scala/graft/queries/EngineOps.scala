@@ -391,7 +391,9 @@ object EngineOps {
         .toDF("band", "ok")
         .groupBy($"band")
         .agg(count(lit(1)).as("files"), sum($"ok").as("files_ok"))
-      val decoded = graft.sources.RasterIO.decodeBlocks(scanned, "c", "t1", 32)
+      val decoded = graft.sources.RasterIO.failOnDecodeError(
+          graft.sources.RasterIO.decodeBlocksQuarantining(
+            scanned.withColumn("tile", lit("t1")), "c", 32))
         .groupBy($"band")
         .agg(count(lit(1)).as("blocks"),
           sum(PixelExpressions.arraySumLong($"pixels")).as("px_sum"),
@@ -432,9 +434,9 @@ object EngineOps {
         qualityBand = "QA")
       val runMask = MaskDef(clearData = Seq(0L, 1L),
         notClearData = Seq(2L, 3L, 4L), nodata = 255L)
-      def go() = graft.cube.CubeRun.run(s, coll, runMask, sceneDir, outDir,
-        "t9", LocalDate.of(2020, 1, 1), LocalDate.of(2020, 1, 31),
-        blockSize = 32)
+      def go() = graft.cube.CubeRun.runTiles(s, coll, runMask, sceneDir,
+        outDir, LocalDate.of(2020, 1, 1), LocalDate.of(2020, 1, 31),
+        tiles = graft.cube.CubeRun.Tiles.Fixed("t9"), blockSize = 32)
       val r1 = go()
       val r2 = go()
       val blocks = s.read.parquet(s"$outDir/blocks")

@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object RasterIO {
 
-  /** S2 — discover scene files: extract (sceneId, band, date) from file
-    * names like `S2A_..._20200105_B04.tif` via configurable regexes.
-    * Metadata-only: reads paths, not contents.
-    */
   /** Default filename conventions, shared with [[graft.cube.CubeRun]] /
     * [[graft.cube.CubeStream]] so the horizon parse, the stream's file
     * filter and the run's scan can never disagree on what is a scene.
@@ -32,6 +28,10 @@ object RasterIO {
   val DefaultDatePattern = "(20[0-9]{6})"
   val DefaultGlob = "*.tif*"
 
+  /** S2 — discover scene files: extract (sceneId, band, date) from file
+    * names like `S2A_..._20200105_B04.tif` via configurable regexes.
+    * Metadata-only: reads paths, not contents.
+    */
   def scanDirectory(spark: SparkSession, dir: String,
                     bandPattern: String = DefaultBandPattern,
                     datePattern: String = DefaultDatePattern,
@@ -46,7 +46,8 @@ object RasterIO {
       // downstream of it) moves path-sized rows, never file bytes — a
       // 10560² scene is ~220 MB, and carrying it as a row value put whole
       // rasters through Tungsten row buffers and shuffle writers. Decode
-      // reads pixel windows straight from the file (decodeBlocksByTile).
+      // reads pixel windows straight from the file
+      // (decodeBlocksQuarantining).
       .withColumn("fname", element_at(split($"path", "/"), -1))
       .select($"path", $"length",
         regexp_extract($"fname", bandPattern, 1).as("band"),
@@ -145,53 +146,6 @@ object RasterIO {
       } finally unmapScene(bb)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** S3 — decode discovered GeoTIFF files into chunked-raster block rows.
-    * Input must carry `path`, `band`, `date` (from [[scanDirectory]]).
-    */
-  def decodeBlocks(files: DataFrame, cube: String, tileId: String,
-                   blockSize: Int = 512): DataFrame =
-    decodeBlocksByTile(
-      files.withColumn("tile", org.apache.spark.sql.functions.lit(tileId)),
-      cube, blockSize)
-
-  /** [[decodeBlocks]] with a PER-FILE tile id from a `tile` column —
-    * the multi-tile scan path ([[graft.cube.CubeRun.runTiles]]): one
-    * directory of many tiles' scenes decodes into one chunked-raster
-    * frame keyed by each file's own tile.
-    */
-  def decodeBlocksByTile(files: DataFrame, cube: String,
-                         blockSize: Int = 512): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select($"path", $"band", $"date", $"tile")
-      .as[(String, String, java.sql.Date, String)]
-      .flatMap { case (path, band, date, tileId) =>
-        // windowed + LAZY: the mapped buffer faults in ~one TIFF tile per
-        // emitted block and the iterator holds ONE block at a time — peak
-        // task memory is block-sized regardless of scene size. (A strict
-        // per-file Seq here held the whole decoded raster — ~450 MB at
-        // the 10560² reference tile — and OOM'd 32-way.)
-        val bb = mapScene(path)
-        val info =
-          try GeoTiff.readInfo(bb)
-          catch { case e: Throwable => unmapScene(bb); throw e }
-        val nodata = if (info.nodata.isNaN) -9999 else info.nodata.toInt
-        val nby = (info.height + blockSize - 1) / blockSize
-        val nbx = (info.width + blockSize - 1) / blockSize
-        releasing(bb, Iterator.tabulate(nby * nbx) { k =>
-          val by = k / nbx; val bx = k % nbx
-          val h = math.min(blockSize, info.height - by * blockSize)
-          val w = math.min(blockSize, info.width - bx * blockSize)
-          val px = GeoTiff.readWindow(bb, info,
-            by * blockSize, bx * blockSize, h, w)
-          graft.raster.Raster.Block(cube, tileId, date, band, by, bx, h, w,
-            info.originX + bx * blockSize * info.scaleX,
-            info.originY - by * blockSize * info.scaleY,
-            info.scaleX, info.scaleY, nodata, px)
-        })
-      }.toDF()
-  }
-
   /** One output row of [[decodeBlocksQuarantining]]: a decoded block
     * (`error` null) or a quarantined file (`error` set, block fields
     * zeroed, `blockY = -1`). `path` rides along on every row so the
@@ -204,18 +158,22 @@ object RasterIO {
       x0: Double, y0: Double, resX: Double, resY: Double, nodata: Int,
       pixels: Array[Int], path: String, error: String)
 
-  /** [[decodeBlocksByTile]] with per-file error capture — the reference
-    * maestro's activity-error discipline (`tasks.py:126-182` marks the
-    * unit ERROR and carries on) instead of Spark's default
-    * fail-the-whole-job: a corrupt or truncated scene file yields an
-    * error row (file path + decoder message) and every healthy file
-    * still decodes. Header parse and tile-offset bounds validate UP
-    * FRONT, so the common corruptions (garbage, truncation) quarantine
-    * before any block emits; a failure later in the lazy window reads
-    * (in-bounds bit rot) emits the quarantine row mid-stream and stops —
-    * blocks already emitted for that file are rendered inert by the
-    * orchestrator, which excludes the whole (tile, period) from
-    * publication and ledgers it ERROR whenever any error row exists.
+  /** S3 — decode discovered GeoTIFF files into chunked-raster block rows,
+    * keyed by each file's own tile. Input must carry `path`, `band`,
+    * `date` (from [[scanDirectory]]) and `tile`. Per-file error capture
+    * is the reference maestro's activity-error discipline
+    * (`tasks.py:126-182` marks the unit ERROR and carries on) instead of
+    * Spark's default fail-the-whole-job: a corrupt or truncated scene
+    * file yields an error row (file path + decoder message) and every
+    * healthy file still decodes. Header parse and tile-offset bounds
+    * validate UP FRONT, so the common corruptions (garbage, truncation)
+    * quarantine before any block emits; a failure later in the lazy
+    * window reads (in-bounds bit rot) emits the quarantine row
+    * mid-stream and stops — blocks already emitted for that file are
+    * rendered inert by the orchestrator, which excludes the whole
+    * (tile, period) from publication and ledgers it ERROR whenever any
+    * error row exists. Callers with no quarantine add
+    * [[failOnDecodeError]].
     */
   def decodeBlocksQuarantining(files: DataFrame, cube: String,
                                blockSize: Int = 512): DataFrame = {
@@ -250,6 +208,12 @@ object RasterIO {
                 unmapScene(bb)
                 Iterator.single(errRow(e))
               case scala.util.Success(info) =>
+                // windowed + LAZY: the mapped buffer faults in ~one TIFF
+                // tile per emitted block and the iterator holds ONE block
+                // at a time — peak task memory is block-sized regardless
+                // of scene size. (A strict per-file Seq here held the
+                // whole decoded raster — ~450 MB at the 10560² reference
+                // tile — and OOM'd 32-way.)
                 val nodata =
                   if (info.nodata.isNaN) -9999 else info.nodata.toInt
                 val nby = (info.height + blockSize - 1) / blockSize
@@ -281,6 +245,16 @@ object RasterIO {
         }
       }.toDF()
   }
+
+  /** The strict form of [[decodeBlocksQuarantining]]: the job fails on
+    * the first error row, naming its file; healthy rows come back as
+    * plain blocks, without `path` and `error`.
+    */
+  def failOnDecodeError(decoded: DataFrame): DataFrame =
+    decoded.filter(when(col("error").isNull, lit(true)).otherwise(
+        raise_error(concat(lit("cannot decode scene "), col("path"),
+          lit(": "), col("error")))))
+      .drop("path", "error")
 
   /** S9 — write one GeoTIFF per (cube, tileId, date|period, band) from
     * block rows, executor-side and streaming: blocks repartition by output

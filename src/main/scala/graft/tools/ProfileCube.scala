@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import graft.model.{Band, Collection, MaskDef}
 
@@ -67,19 +66,7 @@ object ProfileCube {
     }
     println(f"[soak] scene write ${(System.nanoTime() - t0w) / 1e9}%.1f s")
 
-    final case class JobRec(start: Long, var end: Long = -1L, desc: String)
-    val jobs = scala.collection.concurrent.TrieMap.empty[Int, JobRec]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs(e.jobId) = JobRec(e.time, desc = d)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.end = e.time)
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new JobRecorder(spark.sparkContext)
 
     // per-pass peak-heap readout (50 ms-sampled max of total used — pool
     // peaks can't be summed, they peak at different instants). A coarse
@@ -113,16 +100,10 @@ object ProfileCube {
       Thread.sleep(300)
       println(f"== pass $pass: total $total%.1f s  planned=${r.planned} " +
         f"items=${r.items} blocks=${r.blocks} errors=${r.errors} ==")
-      jobs.values.toSeq.groupBy(_.desc).toSeq
-        .map { case (d, js) =>
-          (d, js.map(j => if (j.end > 0) (j.end - j.start) / 1e3 else 0.0).sum,
-            js.size)
-        }
-        .sortBy(-_._2)
-        .foreach { case (d, sec, n) =>
-          println(f"  stage $sec%7.2f s  jobs=$n%3d  " +
-            (if (d.isEmpty) "<untagged>" else d.take(80)))
-        }
+      jobs.byDescription.foreach { case (d, sec, n) =>
+        println(f"  stage $sec%7.2f s  jobs=$n%3d  " +
+          (if (d.isEmpty) "<untagged>" else d.take(80)))
+      }
       // the COG output actually landed
       val dataDir = java.nio.file.Paths.get(outDir, "data")
       val (nCogs, nPngs) =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Dev aid: run ONE SparkEntry query (or a comma-separated list, sharing
@@ -33,24 +32,7 @@ object ProfileOne {
       .groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
 
-    final case class JobRec(start: Long, var end: Long = -1L,
-        var stages: Int = 0, var tasks: Int = 0, desc: String)
-    val jobs = scala.collection.concurrent.TrieMap.empty[Int, JobRec]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("")
-        jobs(e.jobId) = JobRec(e.time, stages = e.stageInfos.size, desc = d)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        jobs.values.lastOption.foreach(_ => ())
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new JobRecorder(spark.sparkContext)
 
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
     for (name <- names; p <- 1 to passes) {
@@ -60,24 +42,19 @@ object ProfileOne {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val total = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let the listener bus drain
-      // (id, rec, seconds) — unfinished jobs print as -1 but count as 0
-      val recs = jobs.toSeq.sortBy(_._1).map { case (id, r) =>
-        (id, r, if (r.end > 0) (r.end - r.start) / 1e3 else -1.0)
-      }
+      // unfinished jobs print as -1 s but count as 0
+      val recs = jobs.recorded
       println(f"== pass $p: $name total ${total}%.3f s, ${recs.size} jobs ==")
-      recs.foreach { case (id, r, sec) =>
-        println(f"  job $id%3d ${sec}%7.3f s  stages=${r.stages}%2d  ${r.desc.take(100)}")
+      recs.foreach { j =>
+        println(f"  job ${j.id}%3d ${j.seconds}%7.3f s  stages=${j.stages}%2d  ${j.desc.take(100)}")
       }
-      val acct = recs.map(t => math.max(t._3, 0)).sum
+      val acct = recs.map(j => math.max(j.seconds, 0)).sum
       println(f"  (job-accounted ${acct}%.3f s of ${total}%.3f s; gap = driver/planning time)")
       // rollup by description: operators that tag their stages (e.g.
       // CubeRun's `cube:<stage>` markers) get a direct per-stage total
-      recs.groupBy(_._2.desc).toSeq
-        .map { case (d, js) => (d, js.map(t => math.max(t._3, 0)).sum, js.size) }
-        .sortBy(-_._2)
-        .foreach { case (d, sec, n) =>
-          println(f"  stage ${sec}%7.3f s  jobs=$n%3d  ${if (d.isEmpty) "<untagged>" else d.take(80)}")
-        }
+      jobs.byDescription.foreach { case (d, sec, n) =>
+        println(f"  stage ${sec}%7.3f s  jobs=$n%3d  ${if (d.isEmpty) "<untagged>" else d.take(80)}")
+      }
     }
     spark.stop()
   }

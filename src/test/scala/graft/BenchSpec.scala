@@ -90,6 +90,40 @@ class BenchSpec extends AnyFunSuite {
     assert(lines.last.contains(s""""part":${lines.size},"parts":${lines.size}"""))
   }
 
+  test("queries_part chunks are byte-identical and valid JSON under a " +
+       "decimal-comma default locale") {
+    val times = Seq(("q_fast", 0.0125), ("q_slow", 1234.5))
+    val prev = java.util.Locale.getDefault
+    val root =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.ROOT)
+        Bench.queryChunkLines(times, "/data/sf0.1")
+      } finally java.util.Locale.setDefault(prev)
+    val german =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.GERMANY)
+        Bench.queryChunkLines(times, "/data/sf0.1")
+      } finally java.util.Locale.setDefault(prev)
+    assert(german == root)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val parsed = german.map(mapper.readTree)
+    assert(parsed.map(_.get("queries").get("q_slow"))
+      .exists(n => n != null && n.isNumber && n.asDouble() == 1234.5))
+  }
+
+  test("a default run writes its detail to scratch and reads the " +
+       "committed prior; SPARK_GRAFT_BENCH_DETAIL names one path for both") {
+    assert(Bench.detailPaths(subset = false, "/scratch", Map.empty) ==
+      ("bench_detail.json", "/scratch/bench_detail.json"))
+    assert(Bench.detailPaths(subset = true, "/scratch", Map.empty) ==
+      ("bench_detail_subset.json", "/scratch/bench_detail_subset.json"))
+    val env = Map("SPARK_GRAFT_BENCH_DETAIL" -> "bench_detail.json")
+    assert(Bench.detailPaths(subset = false, "/scratch", env) ==
+      ("bench_detail.json", "bench_detail.json"))
+    assert(Bench.detailPaths(subset = true, "/scratch", env) ==
+      ("bench_detail.json", "bench_detail.json"))
+  }
+
   test("no committed prior -> every ratio is None (null in JSON), " +
        "never a fabricated 1.0") {
     val (st, mc, code) = ratios(Seq.empty, 0.25, 0.40, None, None)

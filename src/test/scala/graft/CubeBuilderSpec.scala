@@ -177,8 +177,8 @@ class CubeBuilderSpec extends SparkSpec {
     assert(prios("2020-01-05") == 75.0 * 100 / 30)
     assert(prios("2020-01-10") == 75.0 * 100 / 30)
 
-    val composited2 = CubeBuilder.compositeByEfficacy(
-      merged, periods, coll, mask, resolution = 30)
+    val composited2 = graft.cube.CubeRun.mergeCompositeChain(
+      scenes, coll, mask, periods, efficacyPriority = true, resolution = 30)
     // equal efficacy → tie toward later doy (reference sorts keys desc):
     // px1 clear in both Jan-5 (220) and Jan-10 (250) → Jan-10 wins
     val p1 = composited2
@@ -187,8 +187,8 @@ class CubeBuilderSpec extends SparkSpec {
     assert(p1(1) == 250)
 
     // reference-day weighting flips the order toward Jan-5 (ref day 1)
-    val withRefDay = CubeBuilder.compositeByEfficacy(
-      merged, periods, coll, mask, resolution = 30, referenceDay = Some(1))
+    val withRefDay = graft.cube.CubeRun.mergeCompositeChain(
+      scenes, coll, mask, periods, resolution = 30, referenceDay = Some(1))
     val p2 = withRefDay
       .filter(col("band") === "B04" && col("p_start") === "2020-01-01")
       .select("value").head().getSeq[Int](0)

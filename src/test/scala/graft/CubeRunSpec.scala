@@ -1,6 +1,7 @@
 package graft
 
 import graft.cube.CubeRun
+import graft.cube.CubeRun.Tiles
 import graft.model.{Band, Collection, MaskDef}
 import graft.sources.GeoTiff
 
@@ -40,9 +41,9 @@ class CubeRunSpec extends SparkSpec {
     val coPartConf = "spark.sql.requireAllClusterKeysForCoPartition"
     val callerCoPart = spark.conf.getOption(coPartConf)
 
-    val r1 = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    val r1 = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     // 2 periods × 2 spectral bands + QA? expected counts bands incl QA unit rows
     assert(r1.planned == 2 * 3)
     assert(r1.items == 2)   // one item per period
@@ -50,15 +51,15 @@ class CubeRunSpec extends SparkSpec {
     assert(spark.conf.getOption(coPartConf) == callerCoPart,
       "the run's conf override must stay inside its cloned session")
 
-    val r2 = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    val r2 = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     assert(r2.planned == 0, "second run must be a no-op")
 
     // force rebuilds
-    val r3 = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    val r3 = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      force = true, blockSize = 32)
+      tiles = Tiles.Fixed("t9"), force = true, blockSize = 32)
     assert(r3.planned == 6)
     // republication is idempotent: the force rebuild REPLACES its
     // (tileId, p_start) block partitions and upserts items by item_id —
@@ -74,9 +75,9 @@ class CubeRunSpec extends SparkSpec {
     // extending the range backfills only the new periods (C4);
     // keepBucketed exposes the scratch table so the date prune is
     // observable
-    val r4 = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    val r4 = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 2, 15),
-      blockSize = 32, keepBucketed = true)
+      tiles = Tiles.Fixed("t9"), blockSize = 32, keepBucketed = true)
     assert(r4.planned == 3) // one new period × 3 bands
 
     // the backfill decoded NOTHING: its pending period (Feb) has no
@@ -106,9 +107,9 @@ class CubeRunSpec extends SparkSpec {
         GeoTiff.write(px, w, h, tileSize = 32, originX = 0, originY = 320,
           scaleX = 10, scaleY = 10, nodata = if (isQa) 255 else nodata))
     }
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     assert(go().planned == 6)
     // simulate the pre-versioning layout an operator upgrades from:
     // flatten the current ledger + items into PLAIN parquet at the same
@@ -134,13 +135,13 @@ class CubeRunSpec extends SparkSpec {
     // … and FORCED runs migrate both dirs: the first commit flips the
     // pointer (legacy files keep a one-commit reader grace), the next
     // sweeps them — pointer-versioned content only, no orphans
-    val forced = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir,
-      "t9", java.time.LocalDate.of(2020, 1, 1),
-      java.time.LocalDate.of(2020, 1, 31), force = true, blockSize = 32)
+    val forced = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+      tiles = Tiles.Fixed("t9"), force = true, blockSize = 32)
     assert(forced.planned == 6 && forced.items == 2 && forced.blocks == 4)
-    CubeRun.run(spark, coll, mask, sceneDir.toString, outDir,
-      "t9", java.time.LocalDate.of(2020, 1, 1),
-      java.time.LocalDate.of(2020, 1, 31), force = true, blockSize = 32): Unit
+    CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+      tiles = Tiles.Fixed("t9"), force = true, blockSize = 32): Unit
     for (sub <- Seq("ledger", "items")) {
       assert(Ledger.currentVersion(s"$outDir/$sub").isDefined)
       val ls = java.nio.file.Files.list(java.nio.file.Paths.get(outDir, sub))
@@ -166,9 +167,9 @@ class CubeRunSpec extends SparkSpec {
         nodata = if (isQa) 255 else nodata)
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"), bytes)
     }
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     val r1 = go()
     assert(r1.planned == 6 && r1.blocks == 4 && r1.items == 2)
 
@@ -204,9 +205,9 @@ class CubeRunSpec extends SparkSpec {
         nodata = if (isQa) 255 else nodata)
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"), bytes)
     }
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     val r1 = go()
     assert(r1.planned == 6 && r1.blocks == 4 && r1.items == 2)
 
@@ -250,9 +251,9 @@ class CubeRunSpec extends SparkSpec {
         nodata = if (isQa) 255 else nodata)
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_20200105_$band.tif"), bytes)
     }
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir,
-      "t 9=x%7", java.time.LocalDate.of(2020, 1, 1),
-      java.time.LocalDate.of(2020, 1, 16), blockSize = 32)
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 16),
+      tiles = Tiles.Fixed("t 9=x%7"), blockSize = 32)
     val r1 = go()
     assert(r1.planned == 3 && r1.blocks == 2,
       s"hostile tile id must publish blocks: $r1")
@@ -320,9 +321,9 @@ class CubeRunSpec extends SparkSpec {
     java.nio.file.Files.write(corrupt,
       Array.tabulate[Byte](64)(i => (i * 37).toByte))
 
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     val r1 = go()
     assert(r1.planned == 6, "both periods plan")
     assert(r1.errors == 3, "the corrupt period's 3 band units ledger ERROR")
@@ -379,9 +380,9 @@ class CubeRunSpec extends SparkSpec {
     val corrupt = sceneDir.resolve("S_T9_20200120_QA.tif")
     java.nio.file.Files.write(corrupt,
       Array.tabulate[Byte](64)(i => (i * 37).toByte))
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     val r1 = go()
     assert(r1.errors == 3)
     assert(graft.catalog.Ledger.readCurrent(spark, s"$outDir/quarantine").get
@@ -419,9 +420,9 @@ class CubeRunSpec extends SparkSpec {
         Band("NDVI", "ndvi", "int16", nodata,
           expression = "10000.*((B8A-B04)/(B8A+B04))"),
       quicklook = Seq("B04", "B8A", "B04"))
-    val r = CubeRun.run(spark, withNdvi, mask, sceneDir.toString, outDir, "t9",
+    val r = CubeRun.runTiles(spark, withNdvi, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32, publishCogs = true,
+      tiles = Tiles.Fixed("t9"), blockSize = 32, publishCogs = true,
       quicklookRange = Some((0.0, 1000.0)))
     assert(r.planned == 6 && r.items == 2)
     // work root emptied, data root holds one dir per item with the full
@@ -544,7 +545,7 @@ class CubeRunSpec extends SparkSpec {
   }
 
   test("merge→composite over the bucketed block table plans ZERO Exchange") {
-    // the production chain run() executes: decoded blocks persisted
+    // the production chain runTiles() executes: decoded blocks persisted
     // bucketed on (tileId, blockY, blockX), then per-slice merges, the
     // spectral↔quality join and the composite groupBy must all inherit
     // the scan's HashPartitioning — one write-side shuffle for the whole
@@ -576,7 +577,7 @@ class CubeRunSpec extends SparkSpec {
 
     // the AT-SCALE variant: broadcast off (a tile-date quality slice is
     // hundreds of MB in production) + subset-key co-partitioning on (the
-    // conf CubeRun.run sets) — the spectral↔quality join must ride the
+    // conf CubeRun.runTiles sets) — the spectral↔quality join must ride the
     // scan's (tileId, blockY, blockX) partitioning, still zero Exchange
     val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevC =
@@ -616,9 +617,9 @@ class CubeRunSpec extends SparkSpec {
         nodata = if (isQa) 255 else nodata)
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"), bytes)
     }
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     val r1 = go()
     assert(r1.planned == 6 && r1.blocks == 4)
 
@@ -710,9 +711,9 @@ class CubeRunSpec extends SparkSpec {
   test("quicklookRange against a collection without 3 quicklook bands " +
        "fails UP-FRONT, not as a MatchError after the heavy stages") {
     val e = intercept[IllegalArgumentException] {
-      CubeRun.run(spark, coll, mask, "/nonexistent_scenes", "/nonexistent_out",
-        "t9", java.time.LocalDate.of(2020, 1, 1),
-        java.time.LocalDate.of(2020, 1, 31),
+      CubeRun.runTiles(spark, coll, mask, "/nonexistent_scenes",
+        "/nonexistent_out", java.time.LocalDate.of(2020, 1, 1),
+        java.time.LocalDate.of(2020, 1, 31), tiles = Tiles.Fixed("t9"),
         quicklookRange = Some((0.0, 1000.0)))
     }
     assert(e.getMessage.contains("quicklook"))

@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.Ledger
 import graft.cube.{CubeRun, CubeStream}
+import graft.cube.CubeRun.Tiles
 import graft.model.{Band, Collection, MaskDef}
 import graft.sources.GeoTiff
 import org.apache.spark.sql.streaming.Trigger
@@ -42,9 +43,9 @@ class CubeStreamSpec extends SparkSpec {
           sceneDir.resolve(s"S_T9_${date}_$band.tif"), sceneBytes(band, seed))
     // one AvailableNow pass = "the ingest caught up with the directory"
     def pass(): Unit = {
-      val q = CubeStream.ingest(spark, coll, mask, sceneDir.toString, outDir,
-        "t9", java.time.LocalDate.of(2020, 1, 1),
-        java.time.LocalDate.of(2020, 1, 31),
+      val q = CubeStream.ingestTiles(spark, coll, mask, sceneDir.toString,
+        outDir, java.time.LocalDate.of(2020, 1, 1),
+        java.time.LocalDate.of(2020, 1, 31), tiles = Tiles.Fixed("t9"),
         trigger = Trigger.AvailableNow(), blockSize = 32)
       q.awaitTermination()
     }
@@ -95,19 +96,19 @@ class CubeStreamSpec extends SparkSpec {
 
     // and the ingested cube is exactly what a one-shot batch run
     // produces: a manual run over the same range plans ZERO units
-    val manual = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir,
-      "t9", java.time.LocalDate.of(2020, 1, 1),
-      java.time.LocalDate.of(2020, 1, 31), blockSize = 32)
+    val manual = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     assert(manual.planned == 0L,
       "the streaming ingest must converge to the batch-run fixpoint")
 
     // replay safety: a replayed batch carries an OLDER horizon, which
     // only shrinks the expected set — it must plan nothing and touch
     // nothing (the doc's idempotence claim, pinned)
-    val replayed = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir,
-      "t9", java.time.LocalDate.of(2020, 1, 1),
-      java.time.LocalDate.of(2020, 1, 31), blockSize = 32,
-      horizon = Some(java.time.LocalDate.of(2020, 1, 10)))
+    val replayed = CubeRun.runTiles(spark, coll, mask, sceneDir.toString,
+      outDir, java.time.LocalDate.of(2020, 1, 1),
+      java.time.LocalDate.of(2020, 1, 31), tiles = Tiles.Fixed("t9"),
+      blockSize = 32, horizon = Some(java.time.LocalDate.of(2020, 1, 10)))
     assert(replayed.planned == 0L,
       "an older-horizon replay must be a no-op")
     assert(items() == 2L && success() == 6L)
@@ -165,10 +166,10 @@ class CubeStreamSpec extends SparkSpec {
     for (band <- Seq("B04", "B8A", "QA"))
       java.nio.file.Files.write(
         sceneDir.resolve(s"S_T9_20200120_$band.tif"), sceneBytes(band, 2))
-    val q = CubeStream.ingest(spark, coll, mask, sceneDir.toString, outDir,
-      "t9", java.time.LocalDate.of(2020, 1, 1),
-      java.time.LocalDate.of(2020, 1, 31),
-      trigger = Trigger.AvailableNow(), blockSize = 32, publishCogs = true)
+    val q = CubeStream.ingestTiles(spark, coll, mask, sceneDir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+      tiles = Tiles.Fixed("t9"), trigger = Trigger.AvailableNow(),
+      blockSize = 32, publishCogs = true)
     q.awaitTermination()
     // horizon Jan 20 closes period 1 only; its item commits to data/
     // with both spectral COGs (atomic per-item publication)
@@ -208,8 +209,9 @@ class CubeStreamSpec extends SparkSpec {
     val start = java.time.LocalDate.of(2020, 1, 1)
     val end = java.time.LocalDate.of(2020, 12, 31)
     def run(h: java.time.LocalDate): CubeRun.RunResult =
-      CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
-        start, end, blockSize = 32, keepBucketed = true, horizon = Some(h))
+      CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir, start, end,
+        tiles = Tiles.Fixed("t9"), blockSize = 32, keepBucketed = true,
+        horizon = Some(h))
     // build the 8-period history (horizon = day after scene 7's period)
     val r0 = run(start.plusDays(16L * 8))
     assert(r0.planned == 8 * 3 && r0.items == 8)
@@ -243,9 +245,9 @@ class CubeStreamSpec extends SparkSpec {
       java.nio.file.Files.write(
         sceneDir.resolve(s"S_T9_20200120_$band.tif"), sceneBytes(band, 2))
     def pass(lateness: Int): Unit = {
-      val q = CubeStream.ingest(spark, coll, mask, sceneDir.toString, outDir,
-        "t9", java.time.LocalDate.of(2020, 1, 1),
-        java.time.LocalDate.of(2020, 1, 31),
+      val q = CubeStream.ingestTiles(spark, coll, mask, sceneDir.toString,
+        outDir, java.time.LocalDate.of(2020, 1, 1),
+        java.time.LocalDate.of(2020, 1, 31), tiles = Tiles.Fixed("t9"),
         trigger = Trigger.AvailableNow(), blockSize = 32,
         latenessDays = lateness)
       q.awaitTermination()

@@ -110,7 +110,8 @@ class RasterIOSpec extends SparkSpec {
       ("QA", "2020-01-05")))
 
     // decode into chunked-raster rows and verify pixels survive
-    val blocks = RasterIO.decodeBlocks(scanned, "c1", "t1", blockSize = 32)
+    val blocks = RasterIO.failOnDecodeError(RasterIO.decodeBlocksQuarantining(
+      scanned.withColumn("tile", lit("t1")), "c1", blockSize = 32))
     assert(blocks.count() == 3 * 4) // 64/32 = 2×2 blocks per file
     val b00 = blocks.filter(col("band") === "B04" && col("date") === "2020-01-05" &&
       col("blockY") === 0 && col("blockX") === 0).head()
@@ -215,6 +216,23 @@ class RasterIOSpec extends SparkSpec {
       .filter(col("path").endsWith("20200105_B8A.tif")).count() == 3)
   }
 
+  test("failOnDecodeError fails the job on a corrupt scene, naming the " +
+       "file; healthy scenes pass through as plain blocks") {
+    val dir = java.nio.file.Files.createTempDirectory("strictscenes")
+    java.nio.file.Files.write(dir.resolve("S2A_T1_20200105_B04.tif"),
+      GeoTiff.write(checker(64, 64), 64, 64, tileSize = 32, nodata = -9999))
+    def strict() = RasterIO.failOnDecodeError(RasterIO.decodeBlocksQuarantining(
+      RasterIO.scanDirectory(spark, dir.toString)
+        .withColumn("tile", lit("t1")), "c1", blockSize = 32))
+    assert(strict().count() == 4)
+    assert(!strict().columns.exists(Set("path", "error")))
+    java.nio.file.Files.write(dir.resolve("S2A_T1_20200121_B04.tif"),
+      Array.tabulate[Byte](64)(i => (i * 37).toByte))
+    val e = intercept[Exception](strict().count())
+    assert(e.getMessage.contains("S2A_T1_20200121_B04.tif"),
+      s"the failure must name the corrupt file: ${e.getMessage}")
+  }
+
   test("writeGeoTiffs reassembles blocks into one tiled file per band") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("scenes2")
@@ -223,8 +241,9 @@ class RasterIOSpec extends SparkSpec {
     val bytes = GeoTiff.write(px, 64, 64, tileSize = 64,
       originX = 100, originY = 740, scaleX = 10, scaleY = 10, nodata = -9999)
     java.nio.file.Files.write(dir.resolve(s"S2A_T1_20200105_B04.tif"), bytes)
-    val blocks = RasterIO.decodeBlocks(
-      RasterIO.scanDirectory(spark, dir.toString), "c1", "t1", blockSize = 32)
+    val blocks = RasterIO.failOnDecodeError(RasterIO.decodeBlocksQuarantining(
+      RasterIO.scanDirectory(spark, dir.toString).withColumn("tile", lit("t1")),
+      "c1", blockSize = 32))
     RasterIO.writeGeoTiffs(blocks, outDir.toString)
     val written = java.nio.file.Files.list(outDir).iterator()
     assert(written.hasNext)

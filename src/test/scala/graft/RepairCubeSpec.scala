@@ -1,6 +1,7 @@
 package graft
 
 import graft.cube.CubeRun
+import graft.cube.CubeRun.Tiles
 import graft.model.{Band, Collection, MaskDef}
 import graft.sources.GeoTiff
 import graft.tools.RepairCube
@@ -39,9 +40,9 @@ class RepairCubeSpec extends SparkSpec {
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"),
         bytes)
     }
-    CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
 
     val lines = collection.mutable.ArrayBuffer.empty[String]
     // healthy cube: plan rows print, nothing torn
@@ -114,9 +115,9 @@ class RepairCubeSpec extends SparkSpec {
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"),
         bytes)
     }
-    def go() = CubeRun.run(spark, c, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, c, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     go(): Unit
     (outDir, () => go())
   }
@@ -201,9 +202,9 @@ class RepairCubeSpec extends SparkSpec {
       java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"),
         bytes)
     }
-    def go() = CubeRun.run(spark, coll, mask, sceneDir.toString, outDir, "t9",
+    def go() = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
       java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      blockSize = 32)
+      tiles = Tiles.Fixed("t9"), blockSize = 32)
     go(): Unit
     import spark.implicits._
 

@@ -427,7 +427,7 @@ class ScaleSpec extends SparkSpec {
     // parquet scans with real stats don't)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // subset-key co-partitioning for the join (what CubeRun.run sets):
+    // subset-key co-partitioning for the join (what CubeRun.runTiles sets):
     // both join children are partitioned on (tileId, blockY, blockX) ⊂
     // join keys; without this the join re-shuffles on the full key
     val prevCoPart =
@@ -503,7 +503,7 @@ class ScaleSpec extends SparkSpec {
     val scanned = graft.sources.RasterIO.scanDirectory(spark, cogDir,
       bandPattern = "_(B[0-9A-Z]+|QA)_")
     // structural integrity probe only (fullRead re-decodes the 446 MB
-    // tile in one task); the decodeBlocks pixel sum below is the full
+    // tile in one task); the decoded pixel sum below is the full
     // content validation. Probe over a MAPPED buffer — readAllBytes
     // would put the whole multi-hundred-MB COG on the driver heap, the
     // exact buffer class this suite pins as removed.
@@ -520,7 +520,9 @@ class ScaleSpec extends SparkSpec {
     // width pads up to the 512 block grid (10560 → 10752)
     assert(cogInfos.nonEmpty && cogInfos.head.width >= 10560 &&
       cogInfos.head.tileOffsets.nonEmpty, "COG structurally clean")
-    val decoded = graft.sources.RasterIO.decodeBlocks(scanned, "soak", "t0", 512)
+    val decoded = graft.sources.RasterIO.failOnDecodeError(
+      graft.sources.RasterIO.decodeBlocksQuarantining(
+        scanned.withColumn("tile", lit("t0")), "soak", 512))
     val (nBlocks, pxSum) = decoded.agg(count(lit(1)),
       sum(graft.functions.PixelExpressions.arraySumLong($"pixels")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).head
