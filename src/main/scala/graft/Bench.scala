@@ -153,27 +153,42 @@ object Bench {
     * the tail carry the SLOWEST — most diagnostic — queries. Pure
     * function so the spec can pin the packing (every entry appears
     * exactly once, every line fits the bound, ordering is by time).
+    * `maxChunkBytes` bounds the whole line: the envelope (which embeds
+    * `sfJson`, a path of any length) comes out of the entry budget. An
+    * envelope that leaves no room still carries one entry per line.
     */
   private[graft] def queryChunkLines(times: Seq[(String, Double)],
                                      sfJson: String,
                                      maxChunkBytes: Int = 700): Seq[String] = {
+    def line(part: Int, parts: Int, es: Seq[String]): String =
+      s"""{"metric":"queries_part","part":$part,"parts":$parts,"unit":"sec","sf":"$sfJson","queries":${es.mkString("{", ",", "}")}}"""
     val entries = times.sortBy { case (k, v) => (v, k) }
       .map { case (k, v) => "\"" + k + "\":" + num(v) }
+    // part and parts never exceed the entry count, so this envelope is
+    // the widest any line gets
+    val widest = entries.size.max(1)
+    val budget = maxChunkBytes - line(widest, widest, Nil).length
     val packed = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
     var cur = Vector.empty[String]
     var curLen = 0
     for (e <- entries) {
-      if (cur.nonEmpty && curLen + e.length + 1 > maxChunkBytes) {
-        packed += cur; cur = Vector.empty; curLen = 0
-      }
-      cur :+= e; curLen += e.length + 1
+      // joined entries add one comma each after the first
+      val grown = curLen + e.length + (if (cur.isEmpty) 0 else 1)
+      if (cur.nonEmpty && grown > budget) {
+        packed += cur; cur = Vector(e); curLen = e.length
+      } else { cur :+= e; curLen = grown }
     }
     if (cur.nonEmpty) packed += cur
     val n = packed.size
-    packed.zipWithIndex.map { case (es, i) =>
-      s"""{"metric":"queries_part","part":${i + 1},"parts":$n,"unit":"sec","sf":"$sfJson","queries":${es.mkString("{", ",", "}")}}"""
-    }.toSeq
+    packed.zipWithIndex.map { case (es, i) => line(i + 1, n, es) }.toSeq
   }
+
+  /** The summary line repeated as the very last output line, marked so a
+    * reader of the whole stream can tell it from the first copy, which
+    * stays byte-identical for parsers that key on it.
+    */
+  private[graft] def finalCompactLine(compactLine: String): String =
+    compactLine.stripSuffix("}") + ",\"final\":true}"
 
   /** The attribution arithmetic behind the JSON fields, separated so the
     * spec can pin it. `sharedPairs` is (priorSecs, currentSecs) per query
@@ -489,14 +504,15 @@ object Bench {
       s"""{"metric":"total_compact","value":${num(total)},"unit":"sec","n_queries":${results.size},"sweep_noise_median":${num(noise, 2)},"calib_secs":${num(calib)},"calib_mc_secs":${num(calibMc)},"mc_over_st":${num(stealRatio, 2)},$attribution,"min_passes":$minPassesRun,"extra_passes":$extraPasses,"scratch_dir":"$scratchDir","worst5":$worst5}"""
     println(compactLine)
     // Per-query records in tail-survivable form (see [[queryChunkLines]]),
-    // then the compact summary ONCE MORE as the very last line: the
+    // then the compact summary ONCE MORE as the very last line, marked
+    // `"final":true` (see [[finalCompactLine]]): the
     // capture keeps a fixed-size suffix, so whatever chunk prefix it
     // drops, the suffix always ends with complete per-query records for
     // the slowest queries plus the headline total. Additions only — the
     // two lines above are unchanged from previous rounds.
     queryChunkLines(results.map { case (k, (v, _)) => (k, v) }, jq(sfDir))
       .foreach(println)
-    println(compactLine)
+    println(finalCompactLine(compactLine))
     spark.stop()
   }
 }

@@ -27,18 +27,17 @@ object Smoke {
     spark.stop()
   }
 
-  /** Miniature end-to-end cube build over real GeoTIFF files: write scene
-    * files → scan directory → decode blocks → merge → composite → NDVI →
-    * publish items → write composite GeoTIFFs → read one back.
+  /** Miniature end-to-end cube build over real GeoTIFF files, through
+    * the production run ([[graft.cube.CubeRun.runTiles]]): three dated
+    * scenes of one tile → published items, NDVI index blocks and COGs.
     */
   private def miniCubeBuild(spark: SparkSession): Unit = {
-    import graft.cube.CubeBuilder
+    import graft.cube.CubeRun
     import graft.model.{Band, Collection, MaskDef}
-    import graft.sources.{GeoTiff, RasterIO}
-    import org.apache.spark.sql.functions._
+    import graft.sources.GeoTiff
 
     val dir = java.nio.file.Files.createTempDirectory("smoke_scenes")
-    val outDir = java.nio.file.Files.createTempDirectory("smoke_out")
+    val outDir = java.nio.file.Files.createTempDirectory("smoke_out").toString
     val w = 64; val h = 64; val nodata = -9999
     def px(seed: Int, qa: Boolean) = Array.tabulate(w * h) { i =>
       if (qa) (if ((i + seed) % 7 == 0) 4 else 0)
@@ -62,35 +61,26 @@ object Smoke {
       qualityBand = "QA")
     val mask = MaskDef(clearData = Seq(0, 1), notClearData = Seq(2, 3, 4), nodata = 255)
 
-    val scanned = RasterIO.scanDirectory(spark, dir.toString)
-    val blocks = RasterIO.failOnDecodeError(RasterIO.decodeBlocksQuarantining(
-        scanned.withColumn("tile", lit("t1")), "smoke", blockSize = 32))
-      .withColumn("assetOrder", lit(0)).withColumn("source", lit(0))
-    val merged = CubeBuilder.merge(blocks.filter(col("band") =!= "QA"),
-        nodata, combined = true)
-      .unionByName(CubeBuilder.merge(blocks.filter(col("band") === "QA"),
-        255, combined = true))
-    val periods = CubeBuilder.periodTable(spark, coll,
-      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31))
-    val composited = CubeBuilder.composite(merged, periods, coll, mask)
-    val items = CubeBuilder.publishItems(composited, coll).collect()
-    val ndvi = CubeBuilder.indexBands(composited, coll)
-    val ndviRows = ndvi.count()
-    RasterIO.writeGeoTiffs(
-      composited.select(col("cube"), col("tileId"), col("band"),
-        col("p_start"), col("blockY"), col("blockX"), col("height"),
-        col("width"), col("x0"), col("y0"), col("resX"), col("resY"),
-        col("nodata"), col("value").as("pixels")),
-      outDir.toString, periodCols = Seq("p_start"))
-    val written = java.nio.file.Files.list(outDir).count()
-    val sample = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(outDir.toString, "smoke_t1_B04_2020-01-01.tif"))
-    val info = GeoTiff.readInfo(sample)
+    val run = CubeRun.runTiles(spark, coll, mask, dir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+      tiles = CubeRun.Tiles.Fixed("t1"), blockSize = 32, publishCogs = true)
+    val ndviRows = spark.read.parquet(s"$outDir/index_blocks")
+      .filter(org.apache.spark.sql.functions.col("band") === "NDVI").count()
+    val itemDir = java.nio.file.Paths.get(outDir, "data", coll.identifier,
+      "t1", "2020-01-01")
+    val assets = {
+      val s = java.nio.file.Files.list(itemDir)
+      try s.toArray.map(_.toString).sorted finally s.close()
+    }
+    val b04 = assets.find(a => a.contains("_B04_") && a.endsWith(".tif"))
+    assert(b04.nonEmpty, s"B04 COG published: ${assets.mkString(", ")}")
+    val info = GeoTiff.readInfo(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(b04.get)))
     assert(info.width == 64 && info.height == 64, "composite tiff dims")
-    assert(items.nonEmpty, "items published")
+    assert(run.items > 0, "items published")
     assert(ndviRows > 0, "ndvi blocks generated")
-    println(s"[smoke] mini cube build: ${items.length} items, " +
-      s"$ndviRows ndvi blocks, $written composite tiffs; " +
-      s"item0=${items.head.mkString(",")}")
+    println(s"[smoke] mini cube build: ${run.items} items, " +
+      s"${run.blocks} blocks, $ndviRows ndvi blocks, " +
+      s"${assets.length} assets in item 2020-01-01")
   }
 }

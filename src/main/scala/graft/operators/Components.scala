@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Connected components at scale: alternating large-star / small-star
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  * SoCC'14). The 100 TB path behind the near-dup clustering API — min-label
-  * propagation (the gate default in `queries.Pipeline`) converges in
-  * O(diameter) rounds, which is fine for quasi-clique near-dup components;
-  * star alternation converges in O(log² n) rounds on ANY graph shape, so
-  * it is the right tool when edges chain (e.g. transitive similarity at
-  * loose thresholds).
+  * SoCC'14), the one components algorithm behind near-dup clustering
+  * (`queries.Pipeline.componentClusters`). Star alternation converges in
+  * O(log² n) rounds on ANY graph shape, so edges that chain (transitive
+  * similarity at loose thresholds) cost no more rounds than quasi-clique
+  * near-dup components.
   *
   * Both operations are plain groupBy/join rounds — equi-shuffles only, no
   * driver-side graph state; `localCheckpoint` truncates the plan each
@@ -78,11 +77,11 @@ object Components {
     * preserved — the union over partitions of the local star edges links
     * exactly the vertices the original edges linked — while path lengths
     * drop to the number of partition crossings, so the global star
-    * alternation (and min-label propagation) converges in 0-2 rounds on
-    * graphs that previously paid O(log diameter). Memory per task is one
-    * parent entry per distinct vertex in the partition — the same bound
-    * the groupBy state already has, so a partition sized to fit memory
-    * for the shuffle also fits the union-find.
+    * alternation converges in 0-2 rounds on graphs that previously paid
+    * O(log diameter). Memory per task is one parent entry per distinct
+    * vertex in the partition — the same bound the groupBy state already
+    * has, so a partition sized to fit memory for the shuffle also fits
+    * the union-find.
     *
     * Effectiveness tracks input LOCALITY (ScaleSpec pins both regimes):
     * when a partition holds edges of related vertices — the production

@@ -124,7 +124,11 @@ object Analytics {
       // own two-phase plan partial-aggregates on (wday, user) map-side
       // before its exchange — the former .distinct() shuffled the same
       // deduped pairs a SECOND time for byte-identical output
-      .join(days.select($"day".as("wday")), Seq("wday"))
+      // the observed-day list is the build side, pinned: without the hint
+      // AQE may instead broadcast the 7x fanned table when its stage
+      // finishes first — a plan that drops both exchanges at small n but
+      // ships O(events) to every task, and flips run to run
+      .join(broadcast(days.select($"day".as("wday"))), Seq("wday"))
       .groupBy($"wday")
       .agg(countDistinct($"user_id").as("dau7"))
   }

@@ -69,7 +69,7 @@ object EngineOps {
         .toDF("p_start", "p_end")
       val assets = orders(s, d).filter($"o_custkey" <= 3)
         .select(to_date($"o_orderdate").as("date"))
-      val empty = graft.sources.Stac.emptyPeriods(periods, assets)
+      val empty = graft.sources.stac.StacTable.emptyPeriods(periods, assets)
       graft.raster.Raster.emptyRasters(empty, "p_start", "c", "t1", "B1",
           tileWidthPx = 48, tileHeightPx = 48, xmin = 0.0, ymax = 4800.0,
           res = 100.0, nodata = Nodata, blockSize = 32)

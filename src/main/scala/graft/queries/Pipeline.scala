@@ -1006,132 +1006,26 @@ object Pipeline {
       .withColumn("mean_nll_x1e6", expr("nll_x1e6 div tokens"))
   }
 
-  /** Synchronous min-label propagation to a fixpoint over a SYMMETRIC
-    * edge list `sym(a, b)` — each doc's cluster id becomes the smallest
-    * doc_id reachable through its edges. `localCheckpoint` truncates the
-    * plan each round; convergence detection rides the SAME job as the
-    * propagation (an `observe` metric counts changed labels while the
-    * checkpoint materializes — one job per round, not two). If the
-    * metric listener races the `Await` bound (`awaitMs`, injectable so
-    * the spec can pin the path), the fallback is a cheap `isEmpty` scan
-    * of the already-materialized checkpoint, never a join recompute;
-    * `awaitMs < 0` skips the Await outright (the deterministic
-    * listener-lost simulation — a tiny positive bound can still win the
-    * race when the future resolved during materialization).
-    * If the fixpoint is not reached within `maxRounds` — a graph whose
-    * diameter exceeds the near-dup envelope (near-dup components are
-    * quasi-cliques, diameter ~3-5; a 25+-hop transitive chain is not
-    * one, but it IS legitimate input) — the computation falls back to
-    * the O(log² n) [[graft.operators.Components.connectedComponents]]
-    * large-star/small-star path automatically: identical
-    * min-reachable-id semantics, never split clusters, never a hard
-    * failure on a long chain.
-    * Returns (doc_id, cluster_id, members) ordered by doc_id.
+  /** Near-dup clusters over candidate pairs `(id1, id2)`: connected
+    * components by large-star/small-star contraction
+    * ([[graft.operators.Components.connectedComponents]]), so each doc's
+    * cluster id is the smallest doc_id reachable through its edges. Docs
+    * with no edge are their own singleton cluster. Returns
+    * (doc_id, cluster_id, members) ordered by doc_id.
     */
-  def minLabelClusters(docsIds: DataFrame, sym: DataFrame,
-                       awaitMs: Long = 5000L,
-                       maxRounds: Int = 25,
-                       preContract: Boolean = true): DataFrame =
-    minLabelClustersWithRounds(docsIds, sym, awaitMs, maxRounds,
-      preContract)._1
-
-  /** As [[minLabelClusters]], also returning how many propagation rounds
-    * ran and whether the loop (vs. the exhaustion fallback) converged —
-    * pinned by ComponentsSpec so the pointer-jumping round doubling
-    * can't silently regress to one-hop-per-round on chains.
-    */
-  private[graft] def minLabelClustersWithRounds(
-      docsIds: DataFrame, sym: DataFrame,
-      awaitMs: Long = 5000L,
-      maxRounds: Int = 25,
-      preContract: Boolean = true): (DataFrame, Int, Boolean) = {
-    val s = docsIds.sparkSession
-    import s.implicits._
-    // Per-partition union-find contraction before any propagation round
-    // (Components.localContract): the symmetric edge list collapses to
-    // star edges (v ↔ local component min), which preserves components
-    // exactly while dropping both the edge count (≤ one edge per distinct
-    // vertex per partition vs. the full near-dup pair list) and the
-    // diameter (hops left = partition crossings), so the round loop
-    // below converges in 1-2 rounds where the raw graph paid one round
-    // per hop. `preContract = false` keeps the raw graph — the spec uses
-    // it to force the round-exhaustion fallback deterministically.
-    val symEff =
-      if (!preContract) sym
-      else {
-        // both union branches read the contraction — materialize the
-        // partition pass once, and once more feed every propagation round
-        val star = graft.operators.Components.localContract(
-          sym.select($"a".as("src"), $"b".as("dst")))
-          .localCheckpoint(false)
-        star.select($"src".as("a"), $"dst".as("b"))
-          .unionAll(star.select($"dst".as("a"), $"src".as("b")))
-          .localCheckpoint(false)
-      }
-    var labels = docsIds
-      .select($"doc_id", $"doc_id".as("lbl"), lit(false).as("changed"))
-      .localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // Pointer-jumping doubles the contraction per round (r20, guide
-      // §2.4): besides its graph neighbors, every doc also "hears" its
-      // CURRENT label's label — the labels table unions into the edge
-      // side as (doc_id → lbl) rows, so one and the same join yields
-      // min(neighbors' labels, lbl(lbl)). Label values are always doc
-      // ids present in `labels` (init = own id; updates take other
-      // docs' labels), so the lookup always lands. Effective distance
-      // to the component minimum halves per round: adversarial chains
-      // converge in O(log diameter) rounds instead of O(diameter),
-      // while the fixpoint itself — min reachable id, detected by
-      // changed_labels == 0 — is untouched (at the fixpoint
-      // lbl(lbl) = lbl). Cost: |docs| extra join-input rows per round,
-      // no extra join or job.
-      val neigh = symEff
-        .unionAll(labels.select($"doc_id".as("a"), $"lbl".as("b")))
-        .join(labels.select($"doc_id".as("b"), $"lbl".as("nl")), "b")
-        .groupBy($"a").agg(min($"nl").as("minn"))
-      val newLbl = least($"lbl", coalesce($"minn", $"lbl"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = labels
-        .join(neigh.select($"a".as("doc_id"), $"minn"), Seq("doc_id"), "left")
-        .select($"doc_id", newLbl.as("nl"), (newLbl =!= $"lbl").as("changed"))
-        .observe(obs, sum(when($"changed", 1L).otherwise(0L)).as("changed_labels"))
-        .withColumnRenamed("nl", "lbl")
-        .localCheckpoint()
-      converged =
-        if (awaitMs < 0L) next.filter($"changed").isEmpty
-        else
-          try scala.concurrent.Await
-            .result(obs.future,
-              scala.concurrent.duration.Duration(awaitMs, "ms"))
-            .getAs[Long]("changed_labels") == 0L
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              next.filter($"changed").isEmpty
-          }
-      labels = next
-      rounds += 1
-    }
-    val labeled =
-      if (converged) labels.select($"doc_id", $"lbl".as("cluster_id"))
-      else {
-        // round exhaustion: re-solve on the star-contraction path (the
-        // doc-comment fallback) rather than throwing — label propagation
-        // pays one round per hop of diameter, the contraction O(log² n)
-        // rounds on ANY shape, and both compute min-reachable-id
-        val comp = graft.operators.Components.connectedComponents(
-          sym.select($"a".as("src"), $"b".as("dst")))
-          .withColumnRenamed("vertex", "doc_id")
-        docsIds.select($"doc_id").join(comp, Seq("doc_id"), "left")
-          .select($"doc_id",
-            coalesce($"component", $"doc_id").as("cluster_id"))
-      }
+  private[graft] def componentClusters(docIds: DataFrame,
+                                       pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    (labeled
+    val comp = graft.operators.Components.connectedComponents(
+      pairs.select(col("id1").as("src"), col("id2").as("dst")))
+      .withColumnRenamed("vertex", "doc_id")
+    docIds.select(col("doc_id"))
+      .join(comp, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("component"), col("doc_id")).as("cluster_id"))
       .withColumn("members",
-        count(lit(1)).over(Window.partitionBy($"cluster_id")))
-      .orderBy($"doc_id"), rounds, converged)
+        count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
+      .orderBy(col("doc_id"))
   }
 
   val queries: Map[String, Q] = Map(
@@ -1150,44 +1044,17 @@ object Pipeline {
       minhashCandidatePairs(s, d).orderBy(col("id1"), col("id2"))),
 
     // Near-dup CLUSTERS: connected components over the MinHash candidate
-    // pairs by min-label propagation (each doc's cluster id = smallest
-    // doc_id reachable through near-dup edges). The loop runs
-    // synchronous label-propagation rounds to a fixpoint with
-    // `localCheckpoint` truncating the plan each round — near-dup
-    // components have tiny diameters (they're quasi-cliques), so rounds
-    // ≈ 3-5 even at corpus scale; the 100 TB upgrade path is
-    // alternating large-star/small-star (Kiveris et al.), same join
-    // shape per round. Convergence detection rides the SAME job as the
-    // propagation: an `observe` metric counts changed labels while the
-    // checkpoint materializes, so each round is one job, not two. The
-    // oracle walks the same edges with a recursive CTE.
-    "d_dedup_clusters" -> ((s, d) => {
-      import s.implicits._
-      val pairs = minhashCandidatePairs(s, d).localCheckpoint()
-      val sym = pairs.select($"id1".as("a"), $"id2".as("b"))
-        .unionAll(pairs.select($"id2".as("a"), $"id1".as("b")))
-      minLabelClusters(documents(s, d).select($"doc_id"), sym)
-    }),
+    // pairs (each doc's cluster id = smallest doc_id reachable through
+    // near-dup edges), by large-star/small-star contraction — O(log² n)
+    // rounds on any graph shape, each round a checkpointed groupBy/join.
+    // The oracle walks the same edges with a recursive CTE.
+    "d_dedup_clusters" -> ((s, d) =>
+      componentClusters(documents(s, d), minhashCandidatePairs(s, d))),
 
-    // Near-dup clusters via the SCALE path: alternating large-star /
-    // small-star contraction (operators.Components) over the same
-    // MinHash candidate pairs — O(log² n) rounds on any graph shape.
-    // Same recursive-CTE oracle as d_dedup_clusters: both paths must
-    // produce identical components.
-    "d_dedup_clusters_star" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val pairs = minhashCandidatePairs(s, d)
-      val comp = graft.operators.Components.connectedComponents(
-        pairs.select($"id1".as("src"), $"id2".as("dst")))
-        .withColumnRenamed("vertex", "doc_id")
-      documents(s, d).select($"doc_id")
-        .join(comp, Seq("doc_id"), "left")
-        .select($"doc_id", coalesce($"component", $"doc_id").as("cluster_id"))
-        .withColumn("members",
-          count(lit(1)).over(Window.partitionBy($"cluster_id")))
-        .orderBy($"doc_id")
-    }),
+    // Same clusters, same recursive-CTE oracle: star contraction is the
+    // one components path, and this name pins it as d_dedup_clusters does.
+    "d_dedup_clusters_star" -> ((s, d) =>
+      componentClusters(documents(s, d), minhashCandidatePairs(s, d))),
 
     // n-gram (word-set) Jaccard similarity over a bounded id range —
     // exact-recall SCALE shape: prefix filtering (the SSJoin/PPJoin

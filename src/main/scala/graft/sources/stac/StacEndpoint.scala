@@ -96,8 +96,16 @@ final class FileStacEndpoint(path: String) extends StacEndpoint {
   // times — O(catalog) total, not O(catalog × pages).
   @transient private lazy val cachedRows: Seq[StacAssetRow] =
     listFiles().flatMap { f =>
-      val root = StacJson.parse(
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      // Jackson's message quotes only the offending text, not its source:
+      // name the file so a corrupt document in a large catalog is findable
+      val root =
+        try StacJson.parse(
+          new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        catch {
+          case e: java.io.IOException =>
+            throw new java.io.IOException(
+              s"unreadable STAC catalog file ${f.getPath}: ${e.getMessage}", e)
+        }
       val features =
         if (root.has("features")) root.get("features").elements().asScala.toSeq
         else Seq(root)

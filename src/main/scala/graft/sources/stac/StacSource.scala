@@ -1,5 +1,6 @@
 package graft.sources.stac
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -41,7 +42,8 @@ class StacSource extends TableProvider with DataSourceRegister {
 }
 
 object StacTable {
-  /** The S1 asset-row schema — identical to `Stac.itemsFromJson` output. */
+  /** The S1 asset-row schema: one row per (item, band asset), the rows
+    * [[StacJson.featureRows]] parses. */
   val schema: StructType = StructType(Seq(
     StructField("sceneId", StringType),
     StructField("collection", StringType),
@@ -60,6 +62,15 @@ object StacTable {
       .orElse(options.get("url").map(new HttpStacEndpoint(_)))
       .getOrElse(throw new IllegalArgumentException(
         "stac source requires a 'path' (local catalog) or 'url' (server) option"))
+
+  /** M6 — empty-period detection: periods (`p_start`, `p_end`) with no
+    * asset row dated inside them (left anti-join on this schema's
+    * `date`); these route to the S10 empty-raster generator.
+    */
+  def emptyPeriods(periods: DataFrame, assets: DataFrame): DataFrame =
+    periods.join(assets,
+      assets("date") >= periods("p_start") && assets("date") <= periods("p_end"),
+      "left_anti")
 }
 
 class StacTable(options: Map[String, String]) extends Table with SupportsRead {

@@ -71,23 +71,38 @@ class BenchSpec extends AnyFunSuite {
   test("queries_part chunks: every entry once, every line bounded, " +
        "slowest queries in the LAST chunk") {
     val times = (1 to 300).map(i => (f"q$i%03d_some_query_name", i / 100.0))
-    val lines = Bench.queryChunkLines(times, "/data/sf0.1")
-    // each line is bounded well under the 2000-char capture window
-    // (payload bound + fixed envelope), and self-contained JSON
-    assert(lines.forall(_.length < 900))
-    assert(lines.forall(l => l.startsWith("{\"metric\":\"queries_part\"")
-      && l.endsWith("}")))
-    // every query appears exactly once across the chunks
-    val all = lines.flatMap(l =>
-      "\"(q\\d+_some_query_name)\":".r.findAllMatchIn(l).map(_.group(1)))
-    assert(all.sorted == times.map(_._1).sorted)
-    // ascending-time packing: the final chunk holds the slowest query,
-    // so a capture that keeps only the suffix keeps the worst offenders
-    assert(lines.last.contains("\"q300_some_query_name\":3.000"))
-    assert(lines.head.contains("\"q001_some_query_name\":0.010"))
-    // part/parts envelope is consistent
-    assert(lines.head.contains(s""""part":1,"parts":${lines.size}"""))
-    assert(lines.last.contains(s""""part":${lines.size},"parts":${lines.size}"""))
+    // the envelope embeds the scale-factor path, which can be any length:
+    // it counts against the line bound, not on top of it
+    val longSf = "/data/" + "nested/" * 60 + "sf0.1"
+    for (sf <- Seq("/data/sf0.1", longSf)) {
+      val lines = Bench.queryChunkLines(times, sf)
+      // each whole line fits the 700-char default bound, well under the
+      // 2000-char capture window, and is self-contained JSON
+      assert(lines.forall(_.length <= 700), s"sf=$sf: ${lines.map(_.length)}")
+      assert(lines.forall(l => l.startsWith("{\"metric\":\"queries_part\"")
+        && l.endsWith("}")))
+      assert(lines.forall(_.contains(s""""sf":"$sf"""")))
+      // every query appears exactly once across the chunks
+      val all = lines.flatMap(l =>
+        "\"(q\\d+_some_query_name)\":".r.findAllMatchIn(l).map(_.group(1)))
+      assert(all.sorted == times.map(_._1).sorted)
+      // ascending-time packing: the final chunk holds the slowest query,
+      // so a capture that keeps only the suffix keeps the worst offenders
+      assert(lines.last.contains("\"q300_some_query_name\":3.000"))
+      assert(lines.head.contains("\"q001_some_query_name\":0.010"))
+      // part/parts envelope is consistent
+      assert(lines.head.contains(s""""part":1,"parts":${lines.size}"""))
+      assert(lines.last.contains(s""""part":${lines.size},"parts":${lines.size}"""))
+    }
+  }
+
+  test("the repeated summary line is marked final; the first copy is not") {
+    val compact = """{"metric":"total_compact","value":1.500,"unit":"sec","worst5":{"q":1.500}}"""
+    val last = Bench.finalCompactLine(compact)
+    assert(last == """{"metric":"total_compact","value":1.500,"unit":"sec","worst5":{"q":1.500},"final":true}""")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(mapper.readTree(last).get("final").asBoolean())
+    assert(!mapper.readTree(compact).has("final"))
   }
 
   test("queries_part chunks are byte-identical and valid JSON under a " +

@@ -71,7 +71,7 @@ class ComponentsSpec extends SparkSpec {
     check(120, cliques)
   }
 
-  test("agrees with the min-label propagation used by d_dedup_clusters") {
+  test("matches union-find on a seeded 80-vertex random graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val n = 80
@@ -185,66 +185,20 @@ class ComponentsSpec extends SparkSpec {
     check(20, Seq((0L, 10L), (10L, 4L), (4L, 12L), (6L, 18L), (18L, 6L)))
   }
 
-  test("minLabelClusters: observe-timeout fallback converges identically " +
-       "to the metric path") {
+  test("componentClusters: cluster ids match union-find; an isolate is " +
+       "its own one-member cluster") {
     import spark.implicits._
-    // a chain (needs several propagation rounds), a triangle, an isolate
+    // a chain, a triangle, an isolate (doc 8 has no edge)
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L),
       (5L, 6L), (6L, 7L), (5L, 7L))
     val docs = (0L to 8L).toDF("doc_id")
-    val sym = edges.toDF("a", "b")
-      .unionAll(edges.map(_.swap).toDF("a", "b"))
-    val metricPath = graft.queries.Pipeline
-      .minLabelClusters(docs, sym)
+    val out = graft.queries.Pipeline
+      .componentClusters(docs, edges.toDF("id1", "id2"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    // awaitMs < 0 skips the Await — the deterministic simulation of the
-    // listener losing the race; convergence then rides the isEmpty scan
-    // of the materialized checkpoint
-    val fallbackPath = graft.queries.Pipeline
-      .minLabelClusters(docs, sym, awaitMs = -1L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(fallbackPath == metricPath,
-      "fallback convergence must match the observe-metric path")
-    val want = unionFind(9, edges)
-    assert(metricPath.map(t => t._1 -> t._2).toMap == want)
-    // and a tiny positive bound (usually a real TimeoutException, but
-    // possibly a won race) must also converge to the same fixpoint
-    val tinyBound = graft.queries.Pipeline
-      .minLabelClusters(docs, sym, awaitMs = 1L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(tinyBound == metricPath)
-
-    // a graph whose diameter exceeds maxRounds must NEVER return split
-    // clusters OR fail: round exhaustion falls back to the large-star/
-    // small-star contraction and still yields the exact components (the
-    // 0-1-2-3-4 chain needs 4 propagation hops; maxRounds = 2 forces
-    // the fallback — preContract off so the local union-find can't
-    // collapse the chain below the bound and dodge the path under test)
-    val exhausted = graft.queries.Pipeline
-      .minLabelClusters(docs, sym, maxRounds = 2, preContract = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(exhausted == metricPath,
-      "round-exhaustion fallback must match the converged propagation")
-  }
-
-  test("minLabelClusters: pointer jumping converges adversarial chains " +
-       "in O(log diameter) rounds (r20)") {
-    import spark.implicits._
-    // a 64-hop path, preContract OFF and edges left raw: plain one-hop
-    // propagation would need 63 rounds (and hit the exhaustion fallback
-    // at maxRounds = 25); label-of-label doubling must land it in
-    // ~log2(64) + small-constant rounds
-    val chain = (0L until 63L).map(i => (i, i + 1))
-    val docs = (0L to 63L).toDF("doc_id")
-    val sym = chain.toDF("a", "b")
-      .unionAll(chain.map(_.swap).toDF("a", "b"))
-    val (df, rounds, converged) = graft.queries.Pipeline
-      .minLabelClustersWithRounds(docs, sym, preContract = false)
-    val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(converged, "pointer jumping must converge inside maxRounds")
-    info(s"minLabelClusters(64-chain, raw edges): rounds $rounds")
-    assert(rounds <= 10,
-      s"chain of diameter 63 should need ~log2 rounds, took $rounds")
-    assert(out.values.forall(_ == 0L), "whole chain must label 0")
+    assert(out.map(_._1) == (0L to 8L), "one row per doc, ordered by doc_id")
+    assert(out.map(t => t._1 -> t._2).toMap == unionFind(9, edges))
+    assert(out.map(t => t._1 -> t._3).toMap ==
+      Map(0L -> 5L, 1L -> 5L, 2L -> 5L, 3L -> 5L, 4L -> 5L,
+        5L -> 3L, 6L -> 3L, 7L -> 3L, 8L -> 1L))
   }
 }

@@ -305,10 +305,10 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("observe metric is delivered by the localCheckpoint action") {
-    // d_dedup_clusters' one-job-per-round convergence check depends on
-    // localCheckpoint running through withAction so the Observation
-    // listener fires; pin that here so the 5 s fallback path can never
-    // silently become the norm.
+    // an Observation attached to a plan must still deliver its metric
+    // when the only action is localCheckpoint (it runs through
+    // withAction, so the listener fires); pin that so an observe-based
+    // check over a checkpointed frame never falls to its Await timeout.
     import spark.implicits._
     val obs = org.apache.spark.sql.Observation()
     Seq(1L, 2L, 3L).toDF("v")

@@ -354,7 +354,7 @@ class ScaleSpec extends SparkSpec {
     // BASELINE.md's whole-tile envelope end to end: 21×21 = 441 blocks
     // of 512² px × 2 dates (→ 2 periods) × 3 spectral bands + QA run
     // the production chain (CubeRun.mergeCompositeChain — the same
-    // code path run() executes), then index band, item publication and
+    // code path runTiles() executes), then index band, item publication and
     // a streamed whole-tile COG validate. The one shuffle is the
     // repartition by (tile, block); everything downstream runs in
     // place, so total shuffle must scale with blocks while per-task
@@ -713,7 +713,9 @@ class ScaleSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(probe)
     try {
       df.write.format("noop").mode("overwrite").save()
-      Thread.sleep(1500) // listener bus is async; let it drain
+      // the listener bus is async: wait until it has delivered every
+      // task-end event of the write
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(probe)
     (probe.shuffleBytes.get, probe.peakMem.get)
   }
@@ -1131,7 +1133,7 @@ class ScaleSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(probe)
     try {
       df.write.format("noop").mode("overwrite").save()
-      Thread.sleep(1500)
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(probe)
     (probe.shuffleBytes.get, probe.maxTaskPeakMem.get,
       probe.maxTaskShuffleRead.get)

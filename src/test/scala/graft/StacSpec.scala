@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.Stac
+import graft.sources.stac.StacTable
 
 class StacSpec extends SparkSpec {
 
@@ -13,35 +13,6 @@ class StacSpec extends SparkSpec {
                   "B8A":{"href":"s3://x/$id/B8A.tif","type":"image/tiff"},
                   "SCL":{"href":"s3://x/$id/SCL.tif","type":"image/tiff"}}}"""
       .replaceAll("\n\\s*", "")
-
-  private lazy val catalog = {
-    import spark.implicits._
-    Stac.itemsFromJson(Seq(
-      item("s1", "2020-01-05", 12.5, (0, 0, 10, 10)),
-      item("s2", "2020-01-10", 55.0, (5, 5, 15, 15)),
-      item("s3", "2020-02-20", 5.0, (20, 20, 30, 30)),
-      "{not valid json").toDF("json"))
-  }
-
-  test("STAC item JSON parses to one row per band asset; bad JSON dropped") {
-    assert(catalog.count() == 9)
-    val r = catalog.filter(col("sceneId") === "s1" && col("band") === "B04").head()
-    assert(r.getAs[String]("href") == "s3://x/s1/B04.tif")
-    assert(r.getAs[java.sql.Date]("date").toString == "2020-01-05")
-    assert(r.getAs[Double]("cloudCover") == 12.5)
-  }
-
-  test("search applies bbox, datetime, cloud and band predicates") {
-    val hits = Stac.searchAssets(catalog, "S2_L2A", (8, 8, 12, 12),
-      "2020-01-01", "2020-01-31", bands = Seq("B04", "B8A"), maxCloudCover = 60)
-    val ids = hits.select("sceneId", "band").collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted
-    // s3 out of date range+bbox; SCL filtered; s1 and s2 bboxes intersect
-    assert(ids.toSeq == Seq(("s1", "B04"), ("s1", "B8A"), ("s2", "B04"), ("s2", "B8A")))
-    val cloudy = Stac.searchAssets(catalog, "S2_L2A", (8, 8, 12, 12),
-      "2020-01-01", "2020-01-31", maxCloudCover = 20)
-    assert(cloudy.select("sceneId").distinct().count() == 1)
-  }
 
   // ---- DSv2 source (graft.sources.stac.StacSource) ----
 
@@ -61,6 +32,40 @@ class StacSpec extends SparkSpec {
   }
 
   private def dsv2 = spark.read.format("stac").option("path", catalogDir)
+
+  test("search applies bbox, datetime, cloud and band predicates") {
+    def search(maxCloud: Double, bands: Seq[String]) = {
+      val hits = dsv2.load()
+        .filter(col("collection") === "S2_L2A")
+        .filter(col("date") >= lit("2020-01-01").cast("date") &&
+          col("date") <= lit("2020-01-31").cast("date"))
+        .filter(col("cloudCover") <= maxCloud)
+        .filter(col("xmin") < 12.0 && col("xmax") > 8.0 &&
+          col("ymin") < 12.0 && col("ymax") > 8.0)
+      if (bands.isEmpty) hits else hits.filter(col("band").isin(bands: _*))
+    }
+    val ids = search(60, Seq("B04", "B8A")).select("sceneId", "band").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted
+    // s3 out of date range+bbox, s4 out of date range; SCL filtered; s1
+    // and s2 bboxes intersect
+    assert(ids.toSeq == Seq(("s1", "B04"), ("s1", "B8A"), ("s2", "B04"), ("s2", "B8A")))
+    assert(search(20, Nil).select("sceneId").distinct().count() == 1)
+  }
+
+  test("DSv2: a corrupt catalog file fails the read and names the file") {
+    val dir = java.nio.file.Files.createTempDirectory("stac-bad").toFile
+    dir.deleteOnExit()
+    java.nio.file.Files.write(new java.io.File(dir, "good.json").toPath,
+      item("s1", "2020-01-05", 12.5, (0, 0, 10, 10)).getBytes("UTF-8"))
+    java.nio.file.Files.write(new java.io.File(dir, "broken.json").toPath,
+      "{not valid json".getBytes("UTF-8"))
+    val e = intercept[Exception](
+      spark.read.format("stac").option("path", dir.getAbsolutePath).load()
+        .collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(chain.exists(_.contains("broken.json")), chain.mkString("\n"))
+  }
 
   test("DSv2: reads the catalog with the S1 schema, one row per band asset") {
     val df = dsv2.load()
@@ -151,7 +156,7 @@ class StacSpec extends SparkSpec {
     val periods = Seq(("2020-01-01", "2020-01-16"), ("2020-01-17", "2020-02-01"),
       ("2020-02-02", "2020-02-17")).toDF("p_start", "p_end")
       .select(col("p_start").cast("date"), col("p_end").cast("date"))
-    val empty = Stac.emptyPeriods(periods, catalog)
+    val empty = StacTable.emptyPeriods(periods, dsv2.load())
     assert(empty.collect().map(_.getDate(0).toString).toSeq == Seq("2020-01-17", "2020-02-02"))
   }
 }
