@@ -50,94 +50,6 @@ object Ledger {
       .unionByName(completions)
   }
 
-  /** Exactly-once streaming sink body for `foreachBatch`: upsert a
-    * micro-batch of completions into a versioned parquet ledger, with
-    * the applied-batch high-water mark as the replay fence. Structured
-    * Streaming's contract is at-least-once delivery to `foreachBatch` —
-    * after a failure the SAME (batch, batchId) replays — so the sink must
-    * be idempotent: a batchId at or below `_applied` is a no-op, and the version
-    * pointer flips via write-temp-then-atomic-rename AFTER the new
-    * version is fully written (the Publish commit discipline). State on
-    * disk is therefore always a complete version, and re-running any
-    * prefix of batches converges to the same ledger.
-    */
-  def idempotentBatchUpsert(spark: SparkSession, dir: String)
-                           (batch: DataFrame, batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    Files.createDirectories(Paths.get(dir))
-    val appliedPath = Paths.get(dir, "_applied")
-    // the fence is a HIGH-WATER MARK, not a set of every id ever
-    // applied: micro-batch ids are monotonic per checkpoint and a
-    // restart replays only the last unfinished batch, so "applied" is
-    // exactly id <= hwm — and an always-on ingest cannot afford a fence
-    // that grows a line per batch (~525k lines/year at a 1-minute
-    // trigger, O(n) read + rewrite per batch; unbounded growth is the
-    // failure mode the version sweep below exists to prevent). Two
-    // checkpoints driving one ledger dir is outside the single-writer
-    // contract (see commitVersion's scaladoc). Reads tolerate the
-    // legacy multi-line set format by taking the max.
-    val hwm: Long =
-      if (Files.exists(appliedPath))
-        scala.jdk.CollectionConverters.ListHasAsScala(
-          Files.readAllLines(appliedPath)).asScala
-          .flatMap(_.trim.toLongOption).maxOption.getOrElse(-1L)
-      else -1L
-    if (batchId <= hwm) return
-    val nextV = s"ledger_v$batchId"
-    val current = currentVersion(dir)
-    // Crash window: died after flipping `_current` to this batch's version
-    // but before recording it in `_applied`. The version on disk is
-    // complete (the flip happens only after a full parquet write), so the
-    // replay must NOT re-run the upsert — reading ledger_v$batchId and
-    // overwriting the same path would have Spark read from the directory
-    // it is deleting. Just backfill the `_applied` fence and return.
-    if (current.contains(nextV)) {
-      writeApplied(dir, math.max(hwm, batchId))
-      return
-    }
-    val cur = current match {
-      case Some(v) => spark.read.parquet(s"$dir/$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    }
-    upsert(cur, batch).write.mode("overwrite").parquet(s"$dir/$nextV")
-    val tmp = Paths.get(dir, "_current.tmp")
-    Files.write(tmp, nextV.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(dir, "_current"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    writeApplied(dir, math.max(hwm, batchId))
-    // sweep superseded batch versions, keeping the previous one for any
-    // in-flight reader — without this a long-running stream retains a
-    // full ledger copy PER MICRO-BATCH (unbounded growth is the one
-    // failure mode an always-on ingest cannot have). Replay safety is
-    // untouched: the `_applied` fence, not the old version dirs, is
-    // what makes a replayed batch a no-op.
-    val versionName = """^ledger_v\d+$""".r
-    val ls = Files.list(Paths.get(dir))
-    val versions =
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(ls.iterator())
-        .asScala.filter(p => versionName.matches(p.getFileName.toString)).toList
-      finally ls.close()
-    def num(p: java.nio.file.Path): Long =
-      """(\d+)$""".r.findFirstIn(p.getFileName.toString).map(_.toLong).getOrElse(-1L)
-    val keep = versions.filter(_.getFileName.toString != nextV)
-      .sortBy(-num(_)).take(1).map(_.getFileName.toString).toSet + nextV
-    versions.filterNot(p => keep(p.getFileName.toString))
-      .foreach(p => hadoopDelete(spark, p.toString))
-  }
-
-  /** Atomic `_applied` update: temp-file + rename, so a crash mid-write
-    * can never leave a torn fence file (a torn file would silently
-    * regress the high-water mark and re-admit replays).
-    */
-  private def writeApplied(dir: String, hwm: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(dir, "_applied.tmp")
-    Files.write(tmp, hwm.toString.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(dir, "_applied"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Crash-safe versioned parquet commit: write `df` as a NEW version
     * directory under `dir`, then flip the `_current` pointer atomically,
     * then best-effort drop superseded versions KEEPING the last `retain`
@@ -214,7 +126,7 @@ object Ledger {
     // only versioned content. Both deletes run strictly AFTER the new
     // version materialized, so a `df` derived from readCurrent — legacy
     // or versioned — never loses its source mid-write.
-    val versionName = """^(ledger_)?v\d+$""".r
+    val versionName = """^v\d+$""".r
     val s = Files.list(Paths.get(dir))
     val (versions, legacy) =
       try {

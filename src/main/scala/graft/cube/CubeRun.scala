@@ -68,26 +68,32 @@ object CubeRun {
     * Spark jobs. Max taken on the block-count axis (what the volume
     * estimate consumes); the winning (w, h) pair is returned.
     */
-  private[graft] def probeMaxDims(fs: org.apache.hadoop.fs.FileSystem,
-                                  sceneDir: String,
+  private[graft] def probeMaxDims(sceneDir: String,
                                   blockSize: Int): Option[(Int, Int)] = {
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(sceneDir), true)
-    var best = Option.empty[(Int, Int)]
-    def blocks(d: (Int, Int)): Long =
-      ((d._1 + blockSize - 1) / blockSize).toLong *
-        ((d._2 + blockSize - 1) / blockSize)
-    var decoded = 0
-    var listed = 0
-    while (decoded < 16 && listed < 256 && it.hasNext) {
-      val f = it.next()
-      listed += 1
-      if (f.isFile)
-        for (d <- RasterIO.sceneDims(f.getPath.toString)) {
-          decoded += 1
-          if (best.forall(b => blocks(d) > blocks(b))) best = Some(d)
+    // java.nio, not the Hadoop local FileSystem: without the native
+    // Hadoop library every listed file status forks an `ls -ld`, and
+    // the decode already reads scenes through the POSIX contract
+    val walk = java.nio.file.Files.walk(RasterIO.scenePath(sceneDir))
+    try {
+      val it = walk.iterator()
+      var best = Option.empty[(Int, Int)]
+      def blocks(d: (Int, Int)): Long =
+        ((d._1 + blockSize - 1) / blockSize).toLong *
+          ((d._2 + blockSize - 1) / blockSize)
+      var decoded = 0
+      var listed = 0
+      while (decoded < 16 && listed < 256 && it.hasNext) {
+        val f = it.next()
+        if (java.nio.file.Files.isRegularFile(f)) {
+          listed += 1
+          for (d <- RasterIO.sceneDims(f.toString)) {
+            decoded += 1
+            if (best.forall(b => blocks(d) > blocks(b))) best = Some(d)
+          }
         }
-    }
-    best
+      }
+      best
+    } finally walk.close()
   }
 
   /** Build the cube at `outDir` from the scenes in `sceneDir` for the
@@ -339,9 +345,7 @@ object CubeRun {
     if (spark.sparkContext.isLocal) try {
       val have = Runtime.getRuntime.maxMemory()
       val slots = spark.sparkContext.defaultParallelism
-      val sceneFs = new org.apache.hadoop.fs.Path(sceneDir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      for ((w, h) <- probeMaxDims(sceneFs, sceneDir, blockSize)) {
+      for ((w, h) <- probeMaxDims(sceneDir, blockSize)) {
         val blocksPerTile =
           ((w + blockSize - 1) / blockSize).toLong *
             ((h + blockSize - 1) / blockSize)

@@ -2053,7 +2053,11 @@ object Analytics {
         // same register with the same value) — so the former .distinct()
         // was a second full exchange of the ×7 table for byte-identical
         // output
-        .join(days.select($"day".as("wday")), Seq("wday"))
+        // the observed-day list is the build side, pinned: without the hint
+        // AQE may instead broadcast the 7x fanned table when its stage
+        // finishes first — a plan that drops both exchanges at small n but
+        // ships O(events) to every task, and flips run to run
+        .join(broadcast(days.select($"day".as("wday"))), Seq("wday"))
         .groupBy($"wday")
         .agg(countDistinct($"user_id").as("dau7"),
           approx_count_distinct($"user_id", 0.02).as("hll"))

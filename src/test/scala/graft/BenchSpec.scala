@@ -2,70 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's self-attribution arithmetic (r19): the JSON line must
-  * let the gate separate "code regressed" from "box was stolen" without
-  * hand arithmetic over the detail file. Pure function, no Spark.
+/** Pins the bench's pure parts: the sweep order and reducer behind each
+  * reported time, and the tail-survivable output lines. No Spark.
   */
 class BenchSpec extends AnyFunSuite {
 
-  private def ratios(pairs: Seq[(Double, Double)], calib: Double,
-                     calibMc: Double, pCalib: Option[Double],
-                     pMc: Option[Double]) =
-    Bench.attributionRatios(pairs, calib, calibMc, pCalib, pMc)
-
-  test("a hot window reads as calib inflation with a flat code_ratio") {
-    // box 1.4x slower on both probes, every query 1.4x its prior: the
-    // code is flat and the fields say so
-    val pairs = Seq((1.0, 1.4), (2.0, 2.8), (0.5, 0.7))
-    val (st, mc, code) = ratios(pairs, calib = 0.35, calibMc = 0.56,
-      pCalib = Some(0.25), pMc = Some(0.40))
-    assert(st.exists(r => math.abs(r - 1.4) < 1e-9))
-    assert(mc.exists(r => math.abs(r - 1.4) < 1e-9))
-    assert(code.exists(r => math.abs(r - 1.0) < 1e-9))
-  }
-
-  test("a genuine regression survives calib normalization") {
-    // quiet box (probes flat), queries 2x: code_ratio reads the 2x
-    val pairs = Seq((1.0, 2.0), (3.0, 6.0))
-    val (_, _, code) = ratios(pairs, 0.25, 0.40, Some(0.25), Some(0.40))
-    assert(code.exists(r => math.abs(r - 2.0) < 1e-9))
-  }
-
-  test("normalization prefers the multi-core probe, falls back to " +
-       "single-thread when the prior predates it") {
-    val pairs = Seq((10.0, 10.0))
-    // mc probe says 2x steal, st probe flat: the N-way suite tracks mc
-    val (_, _, viaMc) = ratios(pairs, 0.25, 0.80, Some(0.25), Some(0.40))
-    assert(viaMc.exists(r => math.abs(r - 0.5) < 1e-9))
-    // no prior mc: fall back to st
-    val (_, mcNone, viaSt) = ratios(pairs, 0.50, 0.80, Some(0.25), None)
-    assert(mcNone.isEmpty)
-    assert(viaSt.exists(r => math.abs(r - 0.5) < 1e-9))
-  }
-
-  test("attribution prior always resolves to the committed official " +
-       "file; only an official-named redirect keeps its own path") {
-    // subset + ad-hoc dev paths attribute against the committed file:
-    // their own calib is whatever window the last dev probe ran on
-    assert(Bench.attributionPriorPath("bench_detail_subset.json")
-      == "bench_detail.json")
-    assert(Bench.attributionPriorPath("/tmp/solo_e2e_detail.json")
-      == "bench_detail.json")
-    // the official file (including a deliberate redirect to a copy of
-    // it) is its own reference
-    assert(Bench.attributionPriorPath("bench_detail.json")
-      == "bench_detail.json")
-    assert(Bench.attributionPriorPath("/tmp/copy/bench_detail.json")
-      == "/tmp/copy/bench_detail.json")
-    // a process whose cwd is not the repo root names the committed file
-    // explicitly (the cwd-relative default only resolves under sbt)
-    assert(Bench.attributionPriorPath("/tmp/solo_e2e_detail.json",
-      Map("SPARK_GRAFT_ATTR_PRIOR" -> "/repo/bench_detail.json"))
-      == "/repo/bench_detail.json")
-    // ... but the override never hijacks an official-named redirect
-    assert(Bench.attributionPriorPath("/tmp/copy/bench_detail.json",
-      Map("SPARK_GRAFT_ATTR_PRIOR" -> "/repo/bench_detail.json"))
-      == "/tmp/copy/bench_detail.json")
+  test("timed sweeps alternate forward and reverse; a query reads the " +
+       "median of its successful sweeps") {
+    val qs = Seq("a", "b", "c")
+    assert((0 until 3).map(Bench.sweepOrder(qs, _)) ==
+      Seq(Seq("a", "b", "c"), Seq("c", "b", "a"), Seq("a", "b", "c")))
+    // the median, not the minimum: one quiet sweep cannot set the reading
+    assert(Bench.sweepMedian(Seq((2.9, true), (1.8, true), (2.0, true))) == 2.0)
+    // a failed sweep's time-to-exception is not counted
+    assert(Bench.sweepMedian(Seq((0.1, false), (1.8, true), (2.0, true))) == 1.9)
+    assert(Bench.sweepMedian(Seq((9.0, true), (0.1, false), (0.2, false))) == 9.0)
+    // every sweep failed: the times-to-failure stand in, still numeric
+    assert(Bench.sweepMedian(Seq((0.3, false), (0.1, false), (0.2, false))) == 0.2)
   }
 
   test("queries_part chunks: every entry once, every line bounded, " +
@@ -124,29 +77,5 @@ class BenchSpec extends AnyFunSuite {
     val parsed = german.map(mapper.readTree)
     assert(parsed.map(_.get("queries").get("q_slow"))
       .exists(n => n != null && n.isNumber && n.asDouble() == 1234.5))
-  }
-
-  test("a default run writes its detail to scratch and reads the " +
-       "committed prior; SPARK_GRAFT_BENCH_DETAIL names one path for both") {
-    assert(Bench.detailPaths(subset = false, "/scratch", Map.empty) ==
-      ("bench_detail.json", "/scratch/bench_detail.json"))
-    assert(Bench.detailPaths(subset = true, "/scratch", Map.empty) ==
-      ("bench_detail_subset.json", "/scratch/bench_detail_subset.json"))
-    val env = Map("SPARK_GRAFT_BENCH_DETAIL" -> "bench_detail.json")
-    assert(Bench.detailPaths(subset = false, "/scratch", env) ==
-      ("bench_detail.json", "bench_detail.json"))
-    assert(Bench.detailPaths(subset = true, "/scratch", env) ==
-      ("bench_detail.json", "bench_detail.json"))
-  }
-
-  test("no committed prior -> every ratio is None (null in JSON), " +
-       "never a fabricated 1.0") {
-    val (st, mc, code) = ratios(Seq.empty, 0.25, 0.40, None, None)
-    assert(st.isEmpty && mc.isEmpty && code.isEmpty)
-    // prior calib present but zero shared queries (fresh SF): ratios for
-    // the probes still print, code_ratio stays null
-    val (st2, _, code2) =
-      ratios(Seq.empty, 0.25, 0.40, Some(0.25), Some(0.40))
-    assert(st2.nonEmpty && code2.isEmpty)
   }
 }

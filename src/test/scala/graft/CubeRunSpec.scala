@@ -682,6 +682,59 @@ class CubeRunSpec extends SparkSpec {
     assert(go().planned == 0)
   }
 
+  test("run-level T1/T10: a default run composites the later date, " +
+       "efficacyPriority the clearer one; histogramMatching publishes the " +
+       "same items and ledger rows") {
+    val sceneDir = java.nio.file.Files.createTempDirectory("t1_scenes")
+    val w = 32; val h = 32
+    // one period (Jan 1-16), two dates: Jan-10 is the later and the
+    // cloudier scene (every 4th pixel cloud), Jan-5 is clear everywhere
+    for ((date, seed, cloudy) <- Seq(("20200105", 1, false),
+                                     ("20200110", 2, true));
+         band <- Seq("B04", "B8A", "QA")) {
+      val isQa = band == "QA"
+      val px = Array.tabulate(w * h)(i =>
+        if (isQa) (if (cloudy && i % 4 == 0) 4 else 0)
+        else 100 + (i * 7 + seed * 13) % 900)
+      val bytes = GeoTiff.write(px, w, h, tileSize = 32,
+        originX = 0, originY = 320, scaleX = 10, scaleY = 10,
+        nodata = if (isQa) 255 else nodata)
+      java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"), bytes)
+    }
+    def build(efficacyPriority: Boolean = false,
+              histogramMatching: Boolean = false): String = {
+      val outDir = java.nio.file.Files.createTempDirectory("t1_out").toString
+      val r = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+        java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 16),
+        tiles = Tiles.Fixed("t9"), blockSize = 32,
+        efficacyPriority = efficacyPriority,
+        histogramMatching = histogramMatching)
+      assert(r.planned == 3 && r.items == 1 && r.blocks == 2)
+      outDir
+    }
+    // provenance = the chosen date's day of year, per pixel
+    def provenance(outDir: String): Seq[Int] =
+      spark.read.parquet(s"$outDir/blocks")
+        .filter(org.apache.spark.sql.functions.col("band") === "B04")
+        .select("provenance").head().getSeq[Int](0)
+    def catalog(outDir: String, table: String): Set[String] =
+      graft.catalog.Ledger.readCurrent(spark, s"$outDir/$table").get
+        .collect().map(_.toString).toSet
+    val byDate = provenance(build())
+    val eff = build(efficacyPriority = true)
+    val byEfficacy = provenance(eff)
+    // pixel 1 is clear on both dates: the later date wins by default,
+    // the clearer date under efficacy priority
+    assert(byDate(1) == 10)
+    assert(byEfficacy(1) == 5)
+    // pixel 0 is cloud on Jan-10, so both runs take Jan-5 there
+    assert(byDate(0) == 5 && byEfficacy(0) == 5)
+    val matched = build(histogramMatching = true)
+    assert(provenance(matched) == byEfficacy)
+    for (table <- Seq("items", "ledger"))
+      assert(catalog(matched, table) == catalog(eff, table), table)
+  }
+
   test("probeMaxDims sizes the advisory for the LARGEST geometry in a " +
        "mixed-platform scene dir; garbage never aborts; empty dir -> None") {
     import graft.sources.GeoTiff
@@ -696,16 +749,14 @@ class CubeRunSpec extends SparkSpec {
       "not a tiff".getBytes("ASCII")): Unit
     // real scene bundles lead with sidecars: the <=16 budget must count
     // DECODABLE headers, not listed files, or 20 sidecars sorting ahead
-    // of the rasters would starve the probe (listFiles walks in listing
+    // of the rasters would starve the probe (the walk goes in listing
     // order; "A_..." names sort before "S_...")
     for (i <- 0 until 20)
       java.nio.file.Files.write(dir.resolve(f"A_sidecar_$i%02d.xml"),
         "<mtl/>".getBytes("ASCII")): Unit
-    val fs = new org.apache.hadoop.fs.Path(dir.toString)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(CubeRun.probeMaxDims(fs, dir.toString, 32).contains((96, 64)))
+    assert(CubeRun.probeMaxDims(dir.toString, 32).contains((96, 64)))
     val empty = java.nio.file.Files.createTempDirectory("mixdims_empty")
-    assert(CubeRun.probeMaxDims(fs, empty.toString, 32).isEmpty)
+    assert(CubeRun.probeMaxDims(empty.toString, 32).isEmpty)
   }
 
   test("quicklookRange against a collection without 3 quicklook bands " +

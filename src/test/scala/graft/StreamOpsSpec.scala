@@ -711,96 +711,6 @@ class StreamOpsSpec extends SparkSpec {
       "streaming ring must equal the batch trailing-frame shape")
   }
 
-  test("foreachBatch ledger sink is exactly-once under batch replay") {
-    val sparkS = spark
-    import sparkS.implicits._
-    import graft.catalog.Ledger
-    val dir = java.nio.file.Files.createTempDirectory("graft_fb").toString
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[(String, String, String, String, String, String)]
-    val toLedger = (df: org.apache.spark.sql.DataFrame) => df.toDF(
-      "cube", "tile_id", "p_start", "p_end", "band", "status")
-    val q = input.toDS().toDF()
-      .writeStream
-      // a DURABLE checkpoint: run 2 must resume batch numbering (a fresh
-      // temp checkpoint would restart at batchId 0 and hit the fence)
-      .option("checkpointLocation", s"$dir/_ckpt")
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        Ledger.idempotentBatchUpsert(spark, dir)(toLedger(b.toDF()), id)
-      }
-      .trigger(Trigger.AvailableNow())
-    input.addData(("c", "t1", "2024-01-01", "2024-01-16", "B04", "CREATED"),
-      ("c", "t2", "2024-01-01", "2024-01-16", "B04", "SUCCESS"))
-    val run1 = q.start(); run1.awaitTermination()
-
-    def snapshot(): Set[(String, String)] =
-      Ledger.readCurrent(spark, dir).get
-        .select($"tile_id", $"status").as[(String, String)].collect().toSet
-    assert(snapshot() == Set("t1" -> "CREATED", "t2" -> "SUCCESS"))
-
-    // a second batch upserts t1 to SUCCESS
-    input.addData(("c", "t1", "2024-01-01", "2024-01-16", "B04", "SUCCESS"))
-    val run2 = q.start(); run2.awaitTermination()
-    assert(snapshot() == Set("t1" -> "SUCCESS", "t2" -> "SUCCESS"))
-
-    // REPLAY batch 0 (the at-least-once failure case): the applied-id
-    // fence makes it a no-op — t1 must NOT regress to CREATED
-    val replay = Seq(("c", "t1", "2024-01-01", "2024-01-16", "B04",
-      "CREATED")).toDF("cube", "tile_id", "p_start", "p_end", "band",
-      "status")
-    Ledger.idempotentBatchUpsert(spark, dir)(replay, 0L)
-    assert(snapshot() == Set("t1" -> "SUCCESS", "t2" -> "SUCCESS"),
-      "replaying an applied batchId must not change the ledger")
-
-    // an unseen batchId still applies
-    Ledger.idempotentBatchUpsert(spark, dir)(replay, 99L)
-    assert(snapshot() == Set("t1" -> "CREATED", "t2" -> "SUCCESS"))
-
-    // CRASH-WINDOW replay: the sink died after flipping `_current` to
-    // ledger_v99 but before fencing 99 in `_applied`. Simulate by
-    // erasing 99 from the fence, then replay batch 99 — the sink must
-    // notice `_current` already names this batch's version and back-
-    // fill the fence WITHOUT re-running the upsert (re-running would
-    // overwrite the parquet directory it is reading from).
-    val appliedPath = java.nio.file.Paths.get(dir, "_applied")
-    val fence = new String(
-      java.nio.file.Files.readAllBytes(appliedPath), "UTF-8")
-      .split("\n").toSet
-    assert(fence.contains("99"))
-    java.nio.file.Files.write(appliedPath,
-      (fence - "99").toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    val poison = Seq(("c", "t2", "2024-01-01", "2024-01-16", "B04",
-      "ERROR")).toDF("cube", "tile_id", "p_start", "p_end", "band",
-      "status")
-    Ledger.idempotentBatchUpsert(spark, dir)(poison, 99L)
-    assert(snapshot() == Set("t1" -> "CREATED", "t2" -> "SUCCESS"),
-      "crash-window replay must not re-apply (or corrupt) the version")
-    val refenced = new String(
-      java.nio.file.Files.readAllBytes(appliedPath), "UTF-8")
-      .split("\n").toSet
-    assert(refenced.contains("99"), "replay must backfill the fence")
-    // and a SECOND replay takes the ordinary fast-path no-op
-    Ledger.idempotentBatchUpsert(spark, dir)(poison, 99L)
-    assert(snapshot() == Set("t1" -> "CREATED", "t2" -> "SUCCESS"))
-
-    // version growth is BOUNDED: each applied batch sweeps all but the
-    // current + previous version (an always-on stream must not retain
-    // a ledger copy per micro-batch). Batches 0, 1, 99 applied →
-    // only v1 (reader grace) and v99 (current) remain on disk.
-    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    val vdirs = try ls.toArray.map(_.toString.split("/").last)
-      .filter(_.matches("ledger_v\\d+")).toSet finally ls.close()
-    assert(vdirs == Set("ledger_v1", "ledger_v99"),
-      s"superseded batch versions must be swept, got $vdirs")
-
-    // the fence itself is BOUNDED too: a high-water mark (batch ids are
-    // monotonic per checkpoint), not a line per batch ever applied —
-    // after batches 0, 1, 99 it holds the single value 99
-    val fenceNow = new String(
-      java.nio.file.Files.readAllBytes(appliedPath), "UTF-8").trim
-    assert(fenceNow == "99", s"fence must be the hwm alone, got '$fenceNow'")
-  }
-
   test("watermark drops the too-late row and reports it in progress metrics") {
     val sparkS = spark
     import sparkS.implicits._
