@@ -153,11 +153,14 @@ object Ledger {
       legacy.foreach(p => hadoopDelete(spark, p.toString))
   }
 
-  /** Recursive delete through the Hadoop FileSystem — see
-    * [[graft.core.Fs.deleteRecursive]].
+  /** Recursive delete through the Hadoop FileSystem (not java.io.File,
+    * which silently no-ops on non-local filesystems — on cluster
+    * storage that turns "cleanup" into a full-data-copy leak per run).
     */
-  private[graft] def hadoopDelete(spark: SparkSession, path: String): Unit =
-    graft.core.Fs.deleteRecursive(spark, path)
+  private[graft] def hadoopDelete(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
+  }
 
   /** The ledger version the `_current` pointer names, if any. */
   def currentVersion(dir: String): Option[String] = {

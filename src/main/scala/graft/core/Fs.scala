@@ -1,20 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
-/** Filesystem helpers shared by the catalog commit machinery and the
-  * bucketed-layout scratch cleanup.
-  */
+/** Filesystem helpers for the staged publication writes. */
 object Fs {
-
-  /** Recursive delete through the Hadoop FileSystem (not java.io.File,
-    * which silently no-ops on non-local filesystems — on cluster
-    * storage that turns "cleanup" into a full-data-copy leak per run).
-    */
-  def deleteRecursive(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
-  }
 
   /** Name prefix for in-progress staged files under a publication work
     * tree. Executor-side staged writes (COG band files, quicklook PNGs)

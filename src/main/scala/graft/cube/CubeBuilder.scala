@@ -91,8 +91,8 @@ object CubeBuilder {
     * slices as SEPARATE frames (instead of one unioned `merged` frame)
     * matters for the zero-shuffle path: `Union` reports unknown output
     * partitioning, so a composite over `spectralMerge.unionByName(qaMerge)`
-    * re-shuffles the quality join even when both merges preserved a
-    * bucketed scan's (tileId, blockY, blockX) clustering. With slices,
+    * re-shuffles the quality join even when both merges preserved the
+    * block table's (tileId, blockY, blockX) clustering. With slices,
     * both join children keep the scan's HashPartitioning and the whole
     * merge→composite chain plans with zero Exchange (pinned in
     * CubeRunSpec).

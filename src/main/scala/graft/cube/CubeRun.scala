@@ -99,7 +99,8 @@ object CubeRun {
   /** Build the cube at `outDir` from the scenes in `sceneDir` for the
     * periods of [start, end]. The reference Maestro dispatches one unit
     * per (tile, period); here ONE declarative chain carries every tile —
-    * the bucketed (tileId, blockY, blockX) layout co-locates each tile's
+    * the (tileId, blockY, blockX)-clustered block table
+    * ([[clusterBlocks]]) co-locates each tile's
     * lifecycle, so tiles parallelize across the cluster without
     * per-tile jobs. With [[Tiles.FromName]] (the default) tiles are read
     * from the scene FILENAMES, the scan is metadata-only, and the
@@ -118,11 +119,6 @@ object CubeRun {
                force: Boolean = false,
                blockSize: Int = 512,
                blockBuckets: Int = 32,
-               /** keep the scratch bucketed-block table + files after the
-                 * run (debugging/inspection); default drops them — the
-                 * layout is intra-run scratch and would otherwise
-                 * accumulate a full decoded data copy per outDir */
-               keepBucketed: Boolean = false,
                /** also publish composite+index bands as COG items under
                  * `outDir/data` via the crash-safe work→data commit
                  * ([[Publish.publishGeoTiffs]]) */
@@ -157,7 +153,7 @@ object CubeRun {
                glob: String = RasterIO.DefaultGlob,
                bandPattern: String = RasterIO.DefaultBandPattern,
                datePattern: String = RasterIO.DefaultDatePattern): RunResult = {
-    // The bucketed (tileId, blockY, blockX) layout carries every
+    // The (tileId, blockY, blockX)-clustered block table carries every
     // downstream stage shuffle-free — but the spectral↔quality join
     // (keys + date) only rides SUBSET-key co-partitioning when the
     // conf below is off (aggregates accept subset clustering uncondi-
@@ -213,8 +209,7 @@ object CubeRun {
     // in flight per task before switching to sort-based aggregation —
     // the 128 default is ~4 GB across 32 slots at a 2-scene stack and
     // scales with stack depth. 16 bounds in-flight state at ~32 MB/slot;
-    // the fallback sort is nearly free here because the bucketed block
-    // table is already sorted on the grouping prefix.
+    // the fallback then sorts the rest of the task's input, which spills.
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       graft.operators.Scale.CompositeAggInFlightBuffers.toString)
     import spark.implicits._
@@ -275,429 +270,455 @@ object CubeRun {
     // materialize the plan now: the ledger parquet is swapped below and
     // re-evaluating this lazy plan afterwards would read deleted files
     val pending = Ledger.pendingUnits(expected, ledger, force).cache()
-    // ONE action plans the run: the per-period rollup yields both the
-    // planned-unit total and the distinct period list (they were two
-    // separate jobs over the same cached table — on the always-on ingest
-    // this is per-BATCH driver overhead, paid even by 0-pending batches)
-    val unitCounts = stage(spark, "plan") {
-      pending.groupBy($"tile_id", $"p_start", $"p_end")
-        .agg(count(lit(1)).as("n"))
-        .collect()
-    }
-    val plannedCount = unitCounts.map(_.getLong(3)).sum
-    val pendingPeriods = unitCounts
-      .map(r => (r.getString(1), r.getString(2))).distinct
-    // (tile, period) pairs this run will write — the read-back prune set
-    val pendingPairs = unitCounts
-      .map(r => (r.getString(0), r.getString(1))).distinct
-    if (pendingPeriods.isEmpty) {
-      // release the cache entry before the no-op return: under the
-      // always-on ingest this path runs on every batch that arrives
-      // while no period has closed, and a leaked entry per batch is
-      // unbounded cache growth over a stream's lifetime
-      pending.unpersist()
-      return RunResult(0, 0, 0)
-    }
+    // the decoded block table, once defined; released with `pending` in
+    // the finally below, whether the run returns early, completes or throws
+    var blockTable = Option.empty[DataFrame]
+    try {
+      // ONE action plans the run: the per-period rollup yields both the
+      // planned-unit total and the distinct period list (they were two
+      // separate jobs over the same cached table — on the always-on ingest
+      // this is per-BATCH driver overhead, paid even by 0-pending batches)
+      val unitCounts = stage(spark, "plan") {
+        pending.groupBy($"tile_id", $"p_start", $"p_end")
+          .agg(count(lit(1)).as("n"))
+          .collect()
+      }
+      val plannedCount = unitCounts.map(_.getLong(3)).sum
+      val pendingPeriods = unitCounts
+        .map(r => (r.getString(1), r.getString(2))).distinct
+      // (tile, period) pairs this run will write — the read-back prune set
+      val pendingPairs = unitCounts
+        .map(r => (r.getString(0), r.getString(1))).distinct
+      // the no-op return releases `pending` too (finally below): under the
+      // always-on ingest it runs on every batch that arrives while no
+      // period has closed, and a leaked entry per batch is unbounded cache
+      // growth over a stream's lifetime
+      if (pendingPeriods.isEmpty) return RunResult(0, 0, 0)
 
-    // stage 1-2: scan → decode → merge → composite, restricted to pending.
-    // The decoded chunked-raster table persists BUCKETED on (tileId,
-    // blockY, blockX): one write-side shuffle, after which the merge
-    // groupBys, the spectral↔quality join, and the composite groupBy all
-    // inherit the scan's HashPartitioning — the whole merge→composite
-    // chain plans with zero Exchange (pinned in CubeRunSpec). At cluster
-    // scale this is the layout a 1000-executor job wants: every stage of
-    // every (tile, block)'s lifecycle runs where its bytes already live.
-    // C4 scale path: decode ONLY scenes whose (tile, date) can land in a
-    // pending unit — an incremental backfill re-reads its new window,
-    // not the whole archive, and a tile already ledgered SUCCESS drops
-    // out entirely. Tile and date are filename metadata, so the prune
-    // costs zero pixel decodes; the pending-window table is (tiles ×
-    // periods)-bounded and broadcasts into a left-semi join.
-    val pendingWindows = pending
-      .select($"tile_id".as("tile"), $"p_start".cast("date").as("__ps"),
-        $"p_end".cast("date").as("__pe")).distinct()
-    val scanned = scannedTiled.join(broadcast(pendingWindows),
-      scannedTiled("tile") === pendingWindows("tile") &&
-        $"date".between($"__ps", $"__pe"),
-      "left_semi")
-    // Sizing advisory BEFORE the heavy stages: warn while the run is
-    // still cheap to abort — the alternative at production scale is an
-    // OOM hours in, then a torn-partition repair. Two-step so small runs
-    // pay ~nothing: (1) driver-side probe of ONE scene's TIFF header
-    // (bounded FS listing + mmap'd IFD walk, a few KB touched, zero
-    // Spark jobs) gives blocks-per-tile; only if a GENEROUS stack-depth
-    // upper bound (64 — production stacks run 10-30) already implies an
-    // undersized heap does (2) one tiny job over the filename metadata
-    // measure the real depth: max distinct dates per (tile, PERIOD) —
-    // per-period, because a composite stack never spans periods and a
-    // whole-window count would overestimate a 23-period year backfill
-    // ~23×, firing the advisory on every healthy run. Estimates err
-    // simple; the advisory never fails the run.
-    // Single-JVM assumption, explicit: the advisory compares the task
-    // slots against THIS JVM's max heap, which is only the executor heap
-    // on a local[N] master. On a multi-executor cluster the driver's
-    // Runtime.maxMemory says nothing about executor heaps (and
-    // defaultParallelism is cluster-wide), so the check could misfire in
-    // either direction — gate on a local master and stay silent
-    // elsewhere (the Scale.recommendedHeapBytes rule itself is
-    // deployment-agnostic: a cluster operator applies it per executor as
-    // slots-per-executor x the same per-slot demand).
-    if (spark.sparkContext.isLocal) try {
-      val have = Runtime.getRuntime.maxMemory()
-      val slots = spark.sparkContext.defaultParallelism
-      for ((w, h) <- probeMaxDims(sceneDir, blockSize)) {
-        val blocksPerTile =
-          ((w + blockSize - 1) / blockSize).toLong *
-            ((h + blockSize - 1) / blockSize)
-        // PHYSICAL composite bands only: a composite group is one
-        // (spectral band, block, period, tile) and its buffer already
-        // carries QA as the 2× in 2·depth·blockBytes — counting the
-        // quality band again would overstate by bands/(bands-1), and
-        // expression (index) bands and the mask's saturated band never
-        // form composite groups either (CubeBuilder filters both out of
-        // its `spectral` slice: indices derive AFTER compositing,
-        // radsat rides the QA pairing) — counting them would fire
-        // false-positive advisories on index-heavy collections
-        val spectral = math.max(1,
-          collection.bands.count(b => b.expression.isEmpty &&
-            b.name != collection.qualityBand &&
-            b.name != mask.saturatedBand))
-        val groups = pendingPairs.size.toLong * spectral * blocksPerTile
-        def rec(depth: Int) = graft.operators.Scale.recommendedHeapBytes(
-          slots, blockSize, depth, groups, blockBuckets)
-        if (rec(64) > have) {
-          // Loud marker BEFORE the depth job: healthy-sized runs (and
-          // the bench path) must short-circuit at the rec(64) gate
-          // above — this line in a log is the proof the gate did NOT
-          // short-circuit, so "did the advisory cost a Spark job" is
-          // answerable from the log alone.
-          System.err.println(
-            "[cube] sizing probe: depth-64 upper bound exceeds this " +
-              "JVM's heap; measuring real stack depth (one metadata job)")
-          // per-(tile, period) depths: max sizes the in-flight buffers,
-          // the SUM gives the run's true aggregation volume (periods
-          // rarely share one depth — charging max-depth to every group
-          // would overstate a mixed year-long backfill)
-          val depthRow = stage(spark, "plan")(
-            scanned.join(
-                broadcast(pendingWindows.select($"tile".as("__wt"),
-                  $"__ps", $"__pe")),
-                scanned("tile") === $"__wt" &&
-                  $"date".between($"__ps", $"__pe"))
-              .groupBy($"tile", $"__ps")
-              .agg(countDistinct($"date").as("d"))
-              .agg(max($"d"), sum($"d")).collect())
-            .headOption.filterNot(_.isNullAt(0))
-          for (r <- depthRow) {
-            val maxDepth = r.getLong(0).toInt
-            val totalAgg = 2L * r.getLong(1) * spectral * blocksPerTile *
-              graft.operators.Scale.blockBytes(blockSize)
-            val want = graft.operators.Scale.recommendedHeapBytesForVolume(
-              slots, blockSize, maxDepth, totalAgg, blockBuckets)
-            if (maxDepth > 0 && want > have)
-              System.err.println(
-                f"[cube] sizing advisory: ~$groups%d composite groups, " +
-                  f"stack depth <=$maxDepth%d, block $blockSize%d px over " +
-                  f"$slots%d slots wants ~${want / 1e9}%.1f GB heap " +
-                  f"(Scale.recommendedHeapBytesForVolume); this " +
-                  f"single-JVM local master has ${have / 1e9}%.1f GB - " +
-                  f"expect GC thrash or OOM in " +
-                  f"the composite stage. Raise the heap or raise " +
-                  f"blockBuckets (Scale.recommendedBuckets inverts the " +
-                  f"rule for a fixed heap).")
+      // stage 1-2: scan → decode → merge → composite, restricted to pending.
+      // The decoded chunked-raster table is hash-partitioned on (tileId,
+      // blockY, blockX) by one shuffle ([[clusterBlocks]]), after which
+      // the merge groupBys, the spectral↔quality join, and the
+      // composite groupBy all inherit its HashPartitioning — the whole
+      // merge→composite chain plans with zero Exchange (pinned in
+      // CubeRunSpec). At cluster scale this is the layout a 1000-executor
+      // job wants: every stage of every (tile, block)'s lifecycle runs
+      // where its bytes already live.
+      // C4 scale path: decode ONLY scenes whose (tile, date) can land in a
+      // pending unit — an incremental backfill re-reads its new window,
+      // not the whole archive, and a tile already ledgered SUCCESS drops
+      // out entirely. Tile and date are filename metadata, so the prune
+      // costs zero pixel decodes; the pending-window table is (tiles ×
+      // periods)-bounded, built on the driver from the plan rollup (no
+      // job re-reads `pending` for it) and broadcasts into a left-semi
+      // join.
+      val pendingWindows = unitCounts.toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .toDF("tile", "ps", "pe")
+        .select($"tile", $"ps".cast("date").as("__ps"),
+          $"pe".cast("date").as("__pe"))
+      val scanned = scannedTiled.join(broadcast(pendingWindows),
+        scannedTiled("tile") === pendingWindows("tile") &&
+          $"date".between($"__ps", $"__pe"),
+        "left_semi")
+      // Sizing advisory BEFORE the heavy stages: warn while the run is
+      // still cheap to abort — the alternative at production scale is an
+      // OOM hours in, then a torn-partition repair. Two-step so small runs
+      // pay ~nothing: (1) driver-side probe of ONE scene's TIFF header
+      // (bounded FS listing + mmap'd IFD walk, a few KB touched, zero
+      // Spark jobs) gives blocks-per-tile; only if a GENEROUS stack-depth
+      // upper bound (64 — production stacks run 10-30) already implies an
+      // undersized heap does (2) one tiny job over the filename metadata
+      // measure the real depth: max distinct dates per (tile, PERIOD) —
+      // per-period, because a composite stack never spans periods and a
+      // whole-window count would overestimate a 23-period year backfill
+      // ~23×, firing the advisory on every healthy run. Estimates err
+      // simple; the advisory never fails the run.
+      // Single-JVM assumption, explicit: the advisory compares the task
+      // slots against THIS JVM's max heap, which is only the executor heap
+      // on a local[N] master. On a multi-executor cluster the driver's
+      // Runtime.maxMemory says nothing about executor heaps (and
+      // defaultParallelism is cluster-wide), so the check could misfire in
+      // either direction — gate on a local master and stay silent
+      // elsewhere (the Scale.recommendedHeapBytes rule itself is
+      // deployment-agnostic: a cluster operator applies it per executor as
+      // slots-per-executor x the same per-slot demand).
+      if (spark.sparkContext.isLocal) try {
+        val have = Runtime.getRuntime.maxMemory()
+        val slots = spark.sparkContext.defaultParallelism
+        for ((w, h) <- probeMaxDims(sceneDir, blockSize)) {
+          val blocksPerTile =
+            ((w + blockSize - 1) / blockSize).toLong *
+              ((h + blockSize - 1) / blockSize)
+          // PHYSICAL composite bands only: a composite group is one
+          // (spectral band, block, period, tile) and its buffer already
+          // carries QA as the 2× in 2·depth·blockBytes — counting the
+          // quality band again would overstate by bands/(bands-1), and
+          // expression (index) bands and the mask's saturated band never
+          // form composite groups either (CubeBuilder filters both out of
+          // its `spectral` slice: indices derive AFTER compositing,
+          // radsat rides the QA pairing) — counting them would fire
+          // false-positive advisories on index-heavy collections
+          val spectral = math.max(1,
+            collection.bands.count(b => b.expression.isEmpty &&
+              b.name != collection.qualityBand &&
+              b.name != mask.saturatedBand))
+          val groups = pendingPairs.size.toLong * spectral * blocksPerTile
+          def rec(depth: Int) = graft.operators.Scale.recommendedHeapBytes(
+            slots, blockSize, depth, groups, blockBuckets)
+          if (rec(64) > have) {
+            // Loud marker BEFORE the depth job: healthy-sized runs (and
+            // the bench path) must short-circuit at the rec(64) gate
+            // above — this line in a log is the proof the gate did NOT
+            // short-circuit, so "did the advisory cost a Spark job" is
+            // answerable from the log alone.
+            System.err.println(
+              "[cube] sizing probe: depth-64 upper bound exceeds this " +
+                "JVM's heap; measuring real stack depth (one metadata job)")
+            // per-(tile, period) depths: max sizes the in-flight buffers,
+            // the SUM gives the run's true aggregation volume (periods
+            // rarely share one depth — charging max-depth to every group
+            // would overstate a mixed year-long backfill)
+            val depthRow = stage(spark, "plan")(
+              scanned.join(
+                  broadcast(pendingWindows.select($"tile".as("__wt"),
+                    $"__ps", $"__pe")),
+                  scanned("tile") === $"__wt" &&
+                    $"date".between($"__ps", $"__pe"))
+                .groupBy($"tile", $"__ps")
+                .agg(countDistinct($"date").as("d"))
+                .agg(max($"d"), sum($"d")).collect())
+              .headOption.filterNot(_.isNullAt(0))
+            for (r <- depthRow) {
+              val maxDepth = r.getLong(0).toInt
+              val totalAgg = 2L * r.getLong(1) * spectral * blocksPerTile *
+                graft.operators.Scale.blockBytes(blockSize)
+              val want = graft.operators.Scale.recommendedHeapBytesForVolume(
+                slots, blockSize, maxDepth, totalAgg, blockBuckets)
+              if (maxDepth > 0 && want > have)
+                System.err.println(
+                  f"[cube] sizing advisory: ~$groups%d composite groups, " +
+                    f"stack depth <=$maxDepth%d, block $blockSize%d px over " +
+                    f"$slots%d slots wants ~${want / 1e9}%.1f GB heap " +
+                    f"(Scale.recommendedHeapBytesForVolume); this " +
+                    f"single-JVM local master has ${have / 1e9}%.1f GB - " +
+                    f"expect GC thrash or OOM in " +
+                    f"the composite stage. Raise the heap or raise " +
+                    f"blockBuckets (Scale.recommendedBuckets inverts the " +
+                    f"rule for a fixed heap).")
+            }
           }
         }
+      } catch { case scala.util.control.NonFatal(_) => () }
+      // decode with per-file error capture (the reference maestro's
+      // activity-ERROR discipline): a corrupt scene yields a quarantine row
+      // instead of failing the job, and its whole (tile, period) is
+      // excluded from publication and ledgered ERROR — an item is never
+      // published from a partial band set, and ERROR units stay pending so
+      // the next run retries them after the file is repaired.
+      // The block table is written here, then read once for the errored
+      // keys: a quarantined file decodes to one error row, so the collect
+      // is scene-count-bounded, and its periods are matched on the driver
+      // (ISO dates order as strings).
+      val (decoded, erroredKeys) = stage(spark, "decode+bucket") {
+        val d = clusterBlocks(
+          RasterIO.decodeBlocksQuarantining(scanned, collection.identifier,
+              blockSize)
+            .withColumn("assetOrder", lit(0)).withColumn("source", lit(0)),
+          blockBuckets)
+        blockTable = Some(d)
+        val errored = d.filter($"error".isNotNull)
+          .select($"tileId", $"date".cast("string")).collect()
+          .flatMap { r =>
+            val date = r.getString(1)
+            pendingPeriods.collect {
+              case (ps, pe) if ps <= date && date <= pe => (r.getString(0), ps)
+            }
+          }.distinct
+        (d, errored)
       }
-    } catch { case scala.util.control.NonFatal(_) => () }
-    // decode with per-file error capture (the reference maestro's
-    // activity-ERROR discipline): a corrupt scene yields a quarantine row
-    // instead of failing the job, and its whole (tile, period) is
-    // excluded from publication and ledgered ERROR — an item is never
-    // published from a partial band set, and ERROR units stay pending so
-    // the next run retries them after the file is repaired
-    val decoded = stage(spark, "decode+bucket")(
-      graft.operators.Scale.persistBucketed(
-        RasterIO.decodeBlocksQuarantining(scanned, collection.identifier,
-            blockSize)
-          .withColumn("assetOrder", lit(0)).withColumn("source", lit(0)),
-        "cube_blocks", s"$outDir/bucketed_blocks", blockBuckets,
-        Seq("tileId", "blockY", "blockX")))
-    val pendingPeriodsDf = pendingPeriods.toSeq.toDF("ps", "pe")
-      .select($"ps".cast("date").as("p_start"), $"pe".cast("date").as("p_end"))
-    // errored (tile, period) pairs: catalog-bounded (≤ tiles × periods)
-    val erroredKeys: Array[(String, String)] = stage(spark, "quarantine")(
-      decoded
-        .filter($"error".isNotNull).select($"tileId", $"date").distinct()
-        .join(broadcast(pendingPeriodsDf),
-          $"date".between($"p_start", $"p_end"))
-        .select($"tileId", $"p_start".cast("string")).distinct()
-        .collect().map(r => (r.getString(0), r.getString(1))))
-    val erroredSet = erroredKeys.map { case (t, p) => s"$t|$p" }.toSet
-    val qDir = s"$outDir/quarantine"
-    val prevQ = Ledger.readCurrent(spark, qDir)
-    if (erroredSet.nonEmpty || prevQ.isDefined) {
-      val newErrors = decoded.filter($"error".isNotNull)
-        .select($"path", $"tileId", $"date", $"band", $"error")
-      // retire entries whose file now decodes cleanly; refresh re-failures
-      val okPaths = decoded.filter($"error".isNull).select($"path").distinct()
-      // also retire entries whose file is GONE from the scanned listing
-      // (deleted rather than repaired): a vanished path can never decode
-      // again, so without this check its quarantine row would outlive its
-      // (tile, period)'s eventual success forever. The semi-join runs
-      // against the FULL directory listing (metadata-only), not the
-      // pending-window subset — a still-present file whose window isn't
-      // pending this run keeps its entry. Quarantine is thereby scoped to
-      // the run's scene directory, matching how entries are created.
-      val presentPaths = scannedTiled.select($"path").distinct()
-      val mergedQ = prevQ match {
-        case Some(q) => q.join(presentPaths, Seq("path"), "left_semi")
-          .join(okPaths, Seq("path"), "left_anti")
-          .join(newErrors.select($"path"), Seq("path"), "left_anti")
-          .unionByName(newErrors)
-        case None => newErrors
+      val pendingPeriodsDf = pendingPeriods.toSeq.toDF("ps", "pe")
+        .select($"ps".cast("date").as("p_start"), $"pe".cast("date").as("p_end"))
+      val erroredSet = erroredKeys.map { case (t, p) => s"$t|$p" }.toSet
+      val qDir = s"$outDir/quarantine"
+      val prevQ = Ledger.readCurrent(spark, qDir)
+      if (erroredSet.nonEmpty || prevQ.isDefined) {
+        val newErrors = decoded.filter($"error".isNotNull)
+          .select($"path", $"tileId", $"date", $"band", $"error")
+        // retire entries whose file now decodes cleanly; refresh re-failures
+        val okPaths = decoded.filter($"error".isNull).select($"path").distinct()
+        // also retire entries whose file is GONE from the scanned listing
+        // (deleted rather than repaired): a vanished path can never decode
+        // again, so without this check its quarantine row would outlive its
+        // (tile, period)'s eventual success forever. The semi-join runs
+        // against the FULL directory listing (metadata-only), not the
+        // pending-window subset — a still-present file whose window isn't
+        // pending this run keeps its entry. Quarantine is thereby scoped to
+        // the run's scene directory, matching how entries are created.
+        val presentPaths = scannedTiled.select($"path").distinct()
+        val mergedQ = prevQ match {
+          case Some(q) => q.join(presentPaths, Seq("path"), "left_semi")
+            .join(okPaths, Seq("path"), "left_anti")
+            .join(newErrors.select($"path"), Seq("path"), "left_anti")
+            .unionByName(newErrors)
+          case None => newErrors
+        }
+        stage(spark, "quarantine")(Ledger.commitVersion(spark, qDir, mergedQ))
       }
-      stage(spark, "quarantine")(Ledger.commitVersion(spark, qDir, mergedQ))
-    }
-    val blocks = decoded.filter($"error".isNull).drop("path", "error")
-    val composited0 = mergeCompositeChain(blocks, collection, mask,
-      pendingPeriodsDf, efficacyPriority, referenceDay, histogramMatching)
-    // broadcast keys join, not isin literals: erroredSet is quarantine-
-    // bounded (<= tiles x periods), but a disaster-sized quarantine
-    // would serialize thousands of literals into every task closure —
-    // same rationale as Repair.applyTornRepair's ledger downgrade
-    val erroredDf =
-      if (erroredKeys.isEmpty) null
-      else broadcast(erroredKeys.toSeq.toDF("__et", "__ep"))
-    val composited =
-      if (erroredSet.isEmpty) composited0
-      else composited0.join(erroredDf,
-        composited0("tileId") === col("__et") &&
-          composited0("p_start").cast("string") === col("__ep"),
-        "left_anti")
+      val blocks = decoded.filter($"error".isNull).drop("path", "error")
+      val composited0 = mergeCompositeChain(blocks, collection, mask,
+        pendingPeriodsDf, efficacyPriority, referenceDay, histogramMatching)
+      // broadcast keys join, not isin literals: erroredSet is quarantine-
+      // bounded (<= tiles x periods), but a disaster-sized quarantine
+      // would serialize thousands of literals into every task closure —
+      // same rationale as Repair.applyTornRepair's ledger downgrade
+      val erroredDf =
+        if (erroredKeys.isEmpty) null
+        else broadcast(erroredKeys.toSeq.toDF("__et", "__ep"))
+      val composited =
+        if (erroredSet.isEmpty) composited0
+        else composited0.join(erroredDf,
+          composited0("tileId") === col("__et") &&
+            composited0("p_start").cast("string") === col("__ep"),
+          "left_anti")
 
-    // stage 3: publish blocks, index bands, items, ledger. Block tables
-    // overwrite exactly the (tileId, p_start) partitions this run
-    // recomputed (dynamic partition overwrite): a force rebuild or a
-    // crash-resume REPLACES its partitions instead of appending
-    // duplicates, and untouched partitions survive — publication is
-    // idempotent at the unit grain the ledger plans
-    stage(spark, "composite+publish:blocks")(
-      composited.withColumn("value", CubeBuilder.compositeBand(collection))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .options(graft.operators.Scale.BlockParquetOptions)
-        .partitionBy("tileId", "p_start")
-        .parquet(s"$outDir/blocks"))
-    // The merge→composite chain executes exactly ONCE per run — the
-    // blocks write above. Every later publication stage (index bands,
-    // items, COGs, quicklooks) reads BACK the partitions just written
-    // instead of re-running the composite from the bucketed table: at
-    // cube scale the composite aggregation over the full scene stack is
-    // the dominant cost, and items alone used to pay it a second time
-    // (COG publication a third and fourth). The read names the run's
-    // (tile, period) partition DIRECTORIES explicitly — a whole-table
-    // read would list the cube's full lifetime partition tree on the
-    // driver just to prune it back down, and grows with the cube, not
-    // the run; `basePath` keeps tileId/p_start as columns, the escape
-    // matches what the writer used for the directory names, and the
-    // existence filter drops pairs that wrote nothing (an empty period).
-    // A pending pair whose dir predates this run (a crashed run's blocks,
-    // or a force rebuild whose source scenes have since vanished) IS
-    // read back and republished: that is crash-resume semantics — the
-    // item minted from the existing blocks is the one the interrupted
-    // publication owed, and item ids are content-stable so a republish
-    // is idempotent — where publishing nothing would ledger a SUCCESS
-    // with no item behind it. A torn partition (crashed mid-write AND
-    // scenes deleted, so no later run rewrites it) fails the read loudly
-    // at action time; that beats minting an item from partial stats, and
-    // the repair is deleting the torn dir. Fallback to the lazy
-    // composited plan when nothing readable exists — publication then
-    // sees the same empty result it does today.
-    val okPairs = pendingPairs.filterNot { case (t, p) => erroredSet(s"$t|$p") }
-    val blocksBase = s"$outDir/blocks"
-    // pairDirs: the SUCCESS-bound pairs whose blocks partition exists on
-    // disk after the write (the publication read-back set). hollowPairs:
-    // the SUCCESS-bound pairs with NO partition — an empty period, or a
-    // repaired unit whose source scenes are gone, which republishes
-    // nothing; their pre-existing catalog rows are retired below.
-    val (pairDirs, hollowPairs) = {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-      val fs = new org.apache.hadoop.fs.Path(blocksBase)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      // one listStatus per TILE, not one exists() per pair: a large
-      // backfill carries tiles × periods pairs, and on an object store
-      // each existence probe is a round trip — the per-tile listing is
-      // one RPC and the period check is a set lookup
-      val byTile = okPairs.groupBy(_._1).toSeq.map { case (t, ps) =>
-        val tileDir = new org.apache.hadoop.fs.Path(blocksBase,
-          s"tileId=${escapePathName(t)}")
-        // only MISSING maps to "wrote nothing" — a transient listing
-        // failure (store throttling, auth refresh) must propagate, or a
-        // resume would silently skip republishing this tile's items
-        // while still ledgering SUCCESS
-        val present =
-          try fs.listStatus(tileDir).map(_.getPath.getName).toSet
-          catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-        val (there, missing) =
-          ps.partition(p => present(s"p_start=${escapePathName(p._2)}"))
-        (there.map(p => new org.apache.hadoop.fs.Path(tileDir,
-          s"p_start=${escapePathName(p._2)}")), missing)
+      // stage 3: publish blocks, index bands, items, ledger. Block tables
+      // overwrite exactly the (tileId, p_start) partitions this run
+      // recomputed (dynamic partition overwrite): a force rebuild or a
+      // crash-resume REPLACES its partitions instead of appending
+      // duplicates, and untouched partitions survive — publication is
+      // idempotent at the unit grain the ledger plans
+      stage(spark, "composite+publish:blocks")(
+        composited.withColumn("value", CubeBuilder.compositeBand(collection))
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .options(graft.operators.Scale.BlockParquetOptions)
+          .partitionBy("tileId", "p_start")
+          .parquet(s"$outDir/blocks"))
+      // The merge→composite chain executes exactly ONCE per run — the
+      // blocks write above. Every later publication stage (index bands,
+      // items, COGs, quicklooks) reads BACK the partitions just written
+      // instead of re-running the composite from the block table: at
+      // cube scale the composite aggregation over the full scene stack is
+      // the dominant cost, and items alone used to pay it a second time
+      // (COG publication a third and fourth). The read names the run's
+      // (tile, period) partition DIRECTORIES explicitly — a whole-table
+      // read would list the cube's full lifetime partition tree on the
+      // driver just to prune it back down, and grows with the cube, not
+      // the run; `basePath` keeps tileId/p_start as columns, the escape
+      // matches what the writer used for the directory names, and the
+      // existence filter drops pairs that wrote nothing (an empty period).
+      // A pending pair whose dir predates this run (a crashed run's blocks,
+      // or a force rebuild whose source scenes have since vanished) IS
+      // read back and republished: that is crash-resume semantics — the
+      // item minted from the existing blocks is the one the interrupted
+      // publication owed, and item ids are content-stable so a republish
+      // is idempotent — where publishing nothing would ledger a SUCCESS
+      // with no item behind it. A torn partition (crashed mid-write AND
+      // scenes deleted, so no later run rewrites it) fails the read loudly
+      // at action time; that beats minting an item from partial stats, and
+      // the repair is deleting the torn dir. Fallback to the lazy
+      // composited plan when nothing readable exists — publication then
+      // sees the same empty result it does today.
+      val okPairs = pendingPairs.filterNot { case (t, p) => erroredSet(s"$t|$p") }
+      val blocksBase = s"$outDir/blocks"
+      // pairDirs: the SUCCESS-bound pairs whose blocks partition exists on
+      // disk after the write (the publication read-back set). hollowPairs:
+      // the SUCCESS-bound pairs with NO partition — an empty period, or a
+      // repaired unit whose source scenes are gone, which republishes
+      // nothing; their pre-existing catalog rows are retired below.
+      val (pairDirs, hollowPairs) = {
+        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+        val fs = new org.apache.hadoop.fs.Path(blocksBase)
+          .getFileSystem(spark.sessionState.newHadoopConf())
+        // one listStatus per TILE, not one exists() per pair: a large
+        // backfill carries tiles × periods pairs, and on an object store
+        // each existence probe is a round trip — the per-tile listing is
+        // one RPC and the period check is a set lookup
+        val byTile = okPairs.groupBy(_._1).toSeq.map { case (t, ps) =>
+          val tileDir = new org.apache.hadoop.fs.Path(blocksBase,
+            s"tileId=${escapePathName(t)}")
+          // only MISSING maps to "wrote nothing" — a transient listing
+          // failure (store throttling, auth refresh) must propagate, or a
+          // resume would silently skip republishing this tile's items
+          // while still ledgering SUCCESS
+          val present =
+            try fs.listStatus(tileDir).map(_.getPath.getName).toSet
+            catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+          val (there, missing) =
+            ps.partition(p => present(s"p_start=${escapePathName(p._2)}"))
+          (there.map(p => new org.apache.hadoop.fs.Path(tileDir,
+            s"p_start=${escapePathName(p._2)}")), missing)
+        }
+        (byTile.flatMap(_._1), byTile.flatMap(_._2))
       }
-      (byTile.flatMap(_._1), byTile.flatMap(_._2))
-    }
-    // no Try here: pairDirs nonEmpty means readable parquet is EXPECTED
-    // (this run just wrote it, or a crashed run left it); a failure is a
-    // torn partition or a store fault and must fail the run loudly — a
-    // silent fallback to the (possibly empty) lazy plan would publish
-    // nothing yet ledger SUCCESS, the exact hollow-success hole the
-    // read-back closes
-    val pubSource: DataFrame =
-      if (pairDirs.isEmpty) composited
-      else spark.read.option("basePath", blocksBase)
-        .parquet(pairDirs.map(_.toString).toSeq: _*)
-        .withColumn("p_start", $"p_start".cast("date"))
-    val indexDf = CubeBuilder.indexBands(pubSource, collection)
-    // structural, not executed: `!indexDf.isEmpty` re-ran the whole
-    // merge→composite→pivot chain just to learn what the collection
-    // definition already says. A zero-row write (every unit quarantined)
-    // writes no partitions under dynamic overwrite — existing data
-    // survives; and per the loud-failure contract above, an unreadable
-    // partition dir in the read-back FAILS the run (no Try) rather than
-    // being skipped.
-    val hasIndex = collection.bands.exists(_.expression.nonEmpty)
-    // pairDirs.nonEmpty ⇔ some blocks exist for this run ⇔ the pivot has
-    // rows: skips the zero-row write that would leave a schema-less
-    // index_blocks dir on a first run whose every unit quarantined
-    if (hasIndex && pairDirs.nonEmpty)
-      stage(spark, "publish:index")(indexDf.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .options(graft.operators.Scale.BlockParquetOptions)
-        .partitionBy("tileId", "p_start")
-        .parquet(s"$outDir/index_blocks"))
-    // the items catalog is a C1 upsert keyed on item_id (the reference's
-    // get_or_create over the items table), committed pointer-versioned
-    val items = CubeBuilder.publishItems(pubSource, collection)
-    val itemsPath = s"$outDir/items"
-    // (measured r20: riding RunResult's items total on an Observation
-    // attached to the commit write — saving the readback's re-read, 3
-    // jobs — read FLAT solo but LOST 1.15 s in-suite, 2.82→3.97: by the
-    // time a long-lived bench session reaches this query its async
-    // listener bus is seconds behind, and Await(obs.future) blocks on
-    // the backlog — an Observation await is a hidden sync point on the
-    // listener bus. Don't re-litigate without a non-blocking read.)
-    stage(spark, "publish:items") {
-      val newItems = Ledger.readCurrent(spark, itemsPath) match {
-        case Some(old) =>
-          // Retire pre-existing rows for the hollow pairs: a unit this
-          // run completes as SUCCESS with no blocks partition behind it
-          // (repaired unit whose source scenes are gone) must not keep
-          // serving its stale item — the item has no assets, and the
-          // repair planner's items cross-check would re-flag the unit
-          // forever (repair → rebuild-to-nothing → SUCCESS → re-flag, a
-          // permanent oscillation rewriting the ledger every cycle).
-          // Quarantined (ERROR) units are NOT in hollowPairs: they
-          // re-plan next run, and their old item may still front a
-          // healthy surviving partition. Broadcast keys join, not isin
-          // literals (catalog-bounded but disaster-sized repairs exist).
-          val kept =
-            if (hollowPairs.isEmpty) old
-            else old.join(
-              broadcast(hollowPairs.toDF("__ht", "__hp")),
-              old("tileId") === col("__ht") &&
-                old("start_date") === col("__hp"),
-              "left_anti")
-          kept.join(items, Seq("item_id"), "left_anti").unionByName(items)
-        case None => items
+      // no Try here: pairDirs nonEmpty means readable parquet is EXPECTED
+      // (this run just wrote it, or a crashed run left it); a failure is a
+      // torn partition or a store fault and must fail the run loudly — a
+      // silent fallback to the (possibly empty) lazy plan would publish
+      // nothing yet ledger SUCCESS, the exact hollow-success hole the
+      // read-back closes
+      val pubSource: DataFrame =
+        if (pairDirs.isEmpty) composited
+        else spark.read.option("basePath", blocksBase)
+          .parquet(pairDirs.map(_.toString).toSeq: _*)
+          .withColumn("p_start", $"p_start".cast("date"))
+      val indexDf = CubeBuilder.indexBands(pubSource, collection)
+      // structural, not executed: `!indexDf.isEmpty` re-ran the whole
+      // merge→composite→pivot chain just to learn what the collection
+      // definition already says. A zero-row write (every unit quarantined)
+      // writes no partitions under dynamic overwrite — existing data
+      // survives; and per the loud-failure contract above, an unreadable
+      // partition dir in the read-back FAILS the run (no Try) rather than
+      // being skipped.
+      val hasIndex = collection.bands.exists(_.expression.nonEmpty)
+      // pairDirs.nonEmpty ⇔ some blocks exist for this run ⇔ the pivot has
+      // rows: skips the zero-row write that would leave a schema-less
+      // index_blocks dir on a first run whose every unit quarantined
+      if (hasIndex && pairDirs.nonEmpty)
+        stage(spark, "publish:index")(indexDf.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .options(graft.operators.Scale.BlockParquetOptions)
+          .partitionBy("tileId", "p_start")
+          .parquet(s"$outDir/index_blocks"))
+      // the items catalog is a C1 upsert keyed on item_id (the reference's
+      // get_or_create over the items table), committed pointer-versioned
+      val items = CubeBuilder.publishItems(pubSource, collection)
+      val itemsPath = s"$outDir/items"
+      // (measured r20: riding RunResult's items total on an Observation
+      // attached to the commit write — saving the readback's re-read, 3
+      // jobs — read FLAT solo but LOST 1.15 s in-suite, 2.82→3.97: by the
+      // time a long-lived bench session reaches this query its async
+      // listener bus is seconds behind, and Await(obs.future) blocks on
+      // the backlog — an Observation await is a hidden sync point on the
+      // listener bus. Don't re-litigate without a non-blocking read.)
+      stage(spark, "publish:items") {
+        val newItems = Ledger.readCurrent(spark, itemsPath) match {
+          case Some(old) =>
+            // Retire pre-existing rows for the hollow pairs: a unit this
+            // run completes as SUCCESS with no blocks partition behind it
+            // (repaired unit whose source scenes are gone) must not keep
+            // serving its stale item — the item has no assets, and the
+            // repair planner's items cross-check would re-flag the unit
+            // forever (repair → rebuild-to-nothing → SUCCESS → re-flag, a
+            // permanent oscillation rewriting the ledger every cycle).
+            // Quarantined (ERROR) units are NOT in hollowPairs: they
+            // re-plan next run, and their old item may still front a
+            // healthy surviving partition. Broadcast keys join, not isin
+            // literals (catalog-bounded but disaster-sized repairs exist).
+            val kept =
+              if (hollowPairs.isEmpty) old
+              else old.join(
+                broadcast(hollowPairs.toDF("__ht", "__hp")),
+                old("tileId") === col("__ht") &&
+                  old("start_date") === col("__hp"),
+                "left_anti")
+            kept.join(items, Seq("item_id"), "left_anti").unionByName(items)
+          case None => items
+        }
+        Ledger.commitVersion(spark, itemsPath, newItems)
       }
-      Ledger.commitVersion(spark, itemsPath, newItems)
-    }
-    // optional S9+C2 asset publication: composite (and index) bands
-    // stream into per-item COG directories under work/ and each item
-    // commits atomically into data/ only once its full band set exists
-    // (Publish.publishGeoTiffs, executor-parallel) — a crash mid-run
-    // leaves some items fully published and the rest absent, never a
-    // half-visible item
-    if (publishCogs) {
-      val cogBlocks = pubSource
-        .withColumn("pixels", CubeBuilder.compositeBand(collection))
-        .select($"cube", $"tileId", $"band", $"p_start", $"blockY",
-          $"blockX", $"height", $"width", $"x0", $"y0", $"resX", $"resY",
-          $"nodata", $"pixels")
-      val withIndex =
-        if (!hasIndex) cogBlocks
-        else cogBlocks.unionByName(indexDf
+      // optional S9+C2 asset publication: composite (and index) bands
+      // stream into per-item COG directories under work/ and each item
+      // commits atomically into data/ only once its full band set exists
+      // (Publish.publishGeoTiffs, executor-parallel) — a crash mid-run
+      // leaves some items fully published and the rest absent, never a
+      // half-visible item
+      if (publishCogs) {
+        val cogBlocks = pubSource
+          .withColumn("pixels", CubeBuilder.compositeBand(collection))
           .select($"cube", $"tileId", $"band", $"p_start", $"blockY",
             $"blockX", $"height", $"width", $"x0", $"y0", $"resX", $"resY",
-            $"nodata", $"value".as("pixels")))
-      // quicklooks stage into the item work dirs FIRST, so the per-item
-      // commit below moves the PNG together with the band set — an item
-      // is never visible without its quicklook. The write runs on the
-      // executors (the same shared-filesystem contract writeGeoTiffs
-      // already relies on): one row per (tile, period) item, but each
-      // row carries a whole PNG, so routing them through a driver-side
-      // collect would make the driver the byte funnel for every
-      // thumbnail in the run — at production item counts that is
-      // items × ~100 KB of driver heap plus a serial write loop.
-      for ((inMin, inMax) <- quicklookRange) {
-        val workRoot = s"$outDir/work"
-        stage(spark, "publish:quicklook")(
-          CubeBuilder.quicklook(pubSource, collection, inMin, inMax)
-            .foreachPartition { (rows: Iterator[Row]) =>
-              rows.foreach { row =>
-                val dir = Publish.itemWorkDir(workRoot, row.getString(0),
-                  row.getString(1), row.getString(2))
-                java.nio.file.Files.createDirectories(dir)
-                // temp-sibling + atomic rename: a duplicate attempt killed
-                // mid-write must never leave a torn PNG under the staged
-                // name for the item commit to publish
-                graft.core.Fs.writeAtomic(
-                  dir.resolve(s"${row.getString(0)}_${row.getString(1)}_" +
-                    s"${row.getString(2)}_quicklook.png"),
-                  row.getAs[Array[Byte]](4))
-              }
-            })
+            $"nodata", $"pixels")
+        val withIndex =
+          if (!hasIndex) cogBlocks
+          else cogBlocks.unionByName(indexDf
+            .select($"cube", $"tileId", $"band", $"p_start", $"blockY",
+              $"blockX", $"height", $"width", $"x0", $"y0", $"resX", $"resY",
+              $"nodata", $"value".as("pixels")))
+        // quicklooks stage into the item work dirs FIRST, so the per-item
+        // commit below moves the PNG together with the band set — an item
+        // is never visible without its quicklook. The write runs on the
+        // executors (the same shared-filesystem contract writeGeoTiffs
+        // already relies on): one row per (tile, period) item, but each
+        // row carries a whole PNG, so routing them through a driver-side
+        // collect would make the driver the byte funnel for every
+        // thumbnail in the run — at production item counts that is
+        // items × ~100 KB of driver heap plus a serial write loop.
+        for ((inMin, inMax) <- quicklookRange) {
+          val workRoot = s"$outDir/work"
+          stage(spark, "publish:quicklook")(
+            CubeBuilder.quicklook(pubSource, collection, inMin, inMax)
+              .foreachPartition { (rows: Iterator[Row]) =>
+                rows.foreach { row =>
+                  val dir = Publish.itemWorkDir(workRoot, row.getString(0),
+                    row.getString(1), row.getString(2))
+                  java.nio.file.Files.createDirectories(dir)
+                  // temp-sibling + atomic rename: a duplicate attempt killed
+                  // mid-write must never leave a torn PNG under the staged
+                  // name for the item commit to publish
+                  graft.core.Fs.writeAtomic(
+                    dir.resolve(s"${row.getString(0)}_${row.getString(1)}_" +
+                      s"${row.getString(2)}_quicklook.png"),
+                    row.getAs[Array[Byte]](4))
+                }
+              })
+        }
+        stage(spark, "publish:cogs")(
+          Publish.publishGeoTiffs(withIndex, s"$outDir/work", s"$outDir/data"))
       }
-      stage(spark, "publish:cogs")(
-        Publish.publishGeoTiffs(withIndex, s"$outDir/work", s"$outDir/data"))
-    }
 
-    // every planned unit ledgers: SUCCESS normally, ERROR when its
-    // (tile, period) was quarantined — ERROR units are NOT done
-    // (pendingUnits only excludes SUCCESS) so they re-plan next run
-    val completions = {
-      val base = pending.select($"cube", $"tile_id", $"p_start", $"p_end",
-        $"band")
-      if (erroredSet.isEmpty)
-        base.withColumn("status", lit(Ledger.StatusSuccess))
-      else base.join(erroredDf,
-          base("tile_id") === col("__et") &&
-            base("p_start").cast("string") === col("__ep"),
-          "left")
-        .withColumn("status",
-          when(col("__et").isNotNull, lit(Ledger.StatusError))
-            .otherwise(lit(Ledger.StatusSuccess)))
-        .drop("__et", "__ep")
-    }
-    val errorCount =
-      if (erroredSet.isEmpty) 0L
-      else completions.filter($"status" === Ledger.StatusError).count()
-    stage(spark, "publish:ledger")(
-      Ledger.commitVersion(spark, ledgerPath, Ledger.upsert(ledger, completions)))
+      // every planned unit ledgers: SUCCESS normally, ERROR when its
+      // (tile, period) was quarantined — ERROR units are NOT done
+      // (pendingUnits only excludes SUCCESS) so they re-plan next run
+      val completions = {
+        val base = pending.select($"cube", $"tile_id", $"p_start", $"p_end",
+          $"band")
+        if (erroredSet.isEmpty)
+          base.withColumn("status", lit(Ledger.StatusSuccess))
+        else base.join(erroredDf,
+            base("tile_id") === col("__et") &&
+              base("p_start").cast("string") === col("__ep"),
+            "left")
+          .withColumn("status",
+            when(col("__et").isNotNull, lit(Ledger.StatusError))
+              .otherwise(lit(Ledger.StatusSuccess)))
+          .drop("__et", "__ep")
+      }
+      val errorCount =
+        if (erroredSet.isEmpty) 0L
+        else completions.filter($"status" === Ledger.StatusError).count()
+      stage(spark, "publish:ledger")(
+        Ledger.commitVersion(spark, ledgerPath, Ledger.upsert(ledger, completions)))
 
-    pending.unpersist()
-    if (!keepBucketed)
-      graft.operators.Scale.dropBucketed(spark, "cube_blocks",
-        s"$outDir/bucketed_blocks")
-    stage(spark, "readback")(RunResult(plannedCount,
-      Ledger.readCurrent(spark, s"$outDir/items").map(_.count()).getOrElse(0L),
-      readParquetIfExists(spark, s"$outDir/blocks").map(_.count()).getOrElse(0L),
-      errorCount))
+      stage(spark, "readback")(RunResult(plannedCount,
+        Ledger.readCurrent(spark, s"$outDir/items").map(_.count()).getOrElse(0L),
+        readParquetIfExists(spark, s"$outDir/blocks").map(_.count()).getOrElse(0L),
+        errorCount))
+    } finally {
+      pending.unpersist()
+      blockTable.foreach(org.apache.spark.sql.graftbridge.ShuffledScan.release)
+    }
   }
+
+  /** The run's decoded blocks as one table: hash-partitioned into
+    * `buckets` partitions on (tileId, blockY, blockX) by one shuffle,
+    * whose files are the table's only copy (see
+    * [[org.apache.spark.sql.graftbridge.ShuffledScan]]). Every later
+    * groupBy on a superset of those keys plans with no Exchange, and so
+    * does an equi-join on such keys while
+    * `spark.sql.requireAllClusterKeysForCoPartition` is off (as `runTiles`
+    * sets it). The caller releases the table with `ShuffledScan.release`.
+    */
+  private[graft] def clusterBlocks(decoded: DataFrame,
+                                   buckets: Int): DataFrame =
+    org.apache.spark.sql.graftbridge.ShuffledScan(decoded,
+      Seq("tileId", "blockY", "blockX"), buckets)
 
   /** Stages 1-2 of a run — per-band-slice merge then compositeSlices —
     * over an already-decoded block table. Exposed (package-private) so
     * the plan gate can pin the zero-Exchange property on the EXACT
-    * production chain `runTiles` executes: when `blocks` comes from a table
-    * bucketed on (tileId, blockY, blockX), this whole chain must plan
+    * production chain `runTiles` executes: when `blocks` comes from
+    * [[clusterBlocks]], this whole chain must plan
     * with no shuffle after the scan (default flags; the priority branch
     * adds ONE (tile, date)-bounded partial-agg exchange for the T1
     * priority table, which broadcasts back).

@@ -201,9 +201,11 @@ object Scale {
     *                        stack depth (production: 10-30)
     * @param compositeGroups total composite groups in the run =
     *                        bands × blocksPerTile × tiles × periods
-    * @param buckets         block-table bucket count (runTiles
-    *                        `blockBuckets`, default 32) — the composite
-    *                        stage's task count
+    * @param buckets         block-table partition count (runTiles
+    *                        `blockBuckets`, default 32, the
+    *                        [[graft.cube.CubeRun.clusterBlocks]]
+    *                        repartition) — the composite stage's task
+    *                        count
     */
   def recommendedHeapBytes(cores: Int, blockPx: Int, stackDepth: Int,
                            compositeGroups: Long,
@@ -268,55 +270,6 @@ object Scale {
     val w = df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, key).sortBy(key)
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
-  }
-
-  /** Persist `df` bucketed+sorted on a MULTI-column `keys` prefix and read
-    * it back: every downstream groupBy/equi-join whose keys are a superset
-    * of `keys` then plans with ZERO Exchange — the scan's
-    * HashPartitioning(keys, buckets) satisfies their clustered
-    * distribution directly. The table name derives from `path` (stable
-    * across re-runs, so repeated runs overwrite instead of leaking catalog
-    * entries) and the data lives externally at `path`.
-    */
-  def persistBucketed(df: DataFrame, prefix: String, path: String,
-                      buckets: Int, keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "persistBucketed needs at least one bucket key")
-    val table = bucketedTableName(prefix, path)
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      // block-payload rows: bound per-writer row-group buffering
-      .options(BlockParquetOptions)
-      .option("path", path)
-      .saveAsTable(table)
-    df.sparkSession.table(table)
-  }
-
-  /** md5 of the path, not hashCode: 32-bit String.hashCode collisions
-    * are trivial to hit at scale and two colliding paths would silently
-    * share (and clobber) one catalog entry.
-    */
-  private def bucketedTableName(prefix: String, path: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8")).take(8)
-      .map(b => f"$b%02x").mkString
-    s"${prefix}_$digest"
-  }
-
-  /** Drop a [[persistBucketed]] table's catalog entry and delete its
-    * data directory — the layout is intra-job scratch, and without
-    * cleanup every distinct path accumulates a full data copy on disk
-    * plus a metastore entry forever.
-    */
-  def dropBucketed(spark: org.apache.spark.sql.SparkSession,
-                   prefix: String, path: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${bucketedTableName(prefix, path)}")
-    // delete through the Hadoop FileSystem, not java.io.File: the
-    // bucketed scratch lives wherever Spark wrote it (HDFS/S3 on the
-    // cluster deployments this layout targets), and a local-File
-    // recursion would silently no-op there — leaking a full decoded
-    // data copy per run
-    graft.core.Fs.deleteRecursive(spark, path)
   }
 
   /** Number of shuffle exchanges in `df`'s physical plan — the levers in

@@ -1680,23 +1680,20 @@ object Pipeline {
       import org.apache.spark.sql.expressions.Window
       val G = 16; val K = 16; val C = 150; val TopK = 5
       val emb = embeddings(s, d).select($"vec_id", $"embedding")
-      // ONE hash exchange on vec_id right after the explode: every
-      // downstream aggregation keys on a superset of {vec_id} — ip's
-      // (vec_id, m, j), codes' (vec_id, m), adc's (qid, vec_id) after
-      // the broadcast joins — so they all accept the subset-key
-      // clustering and run exchange-free off this single shuffle
-      // (aggregates take subset clustering unconditionally; r12 rule)
-      // localCheckpoint materializes the repartitioned table ONCE (r20):
-      // without it the explode+shuffle subtree repeats under each
-      // consumer in the static plan (the r19 dump showed 37→39 exchange
-      // nodes and left the single-shuffle claim invisible; runtime reuse
-      // depended on exchange reuse). Two consumers (codebook filter, ip
-      // join) — the r14 "don't checkpoint small dims" finding predates
-      // the repartition, whose exchange is what this pin dedupes.
+      // localCheckpoint materializes the exploded dims ONCE for its two
+      // consumers (codebook filter, ip join); without it the optimizer
+      // pushes each consumer's vec_id filter below the explode and plans
+      // one explode per consumer. A checkpoint reports no partitioning,
+      // so ip, codes and adc each hash-shuffle on their own keys; the
+      // final plan has 9 exchanges (PlanQualitySpec pins the count). A
+      // repartition(vec_id) before the checkpoint (r20) was one more
+      // full shuffle that no aggregate used: dropping it read no slower
+      // in paired A/B runs (plans/v_ann_pq/ab_sweeps.txt). persist
+      // would carry the partitioning, but a query hands back a lazy
+      // frame with no point at which to unpersist it.
       val dims = emb.select($"vec_id", posexplode($"embedding").as(Seq("k", "v")))
         .select($"vec_id", expr("k div 4").cast("int").as("m"), $"k",
           floor($"v".cast("double") * 1000).cast("long").as("qv"))
-        .repartition($"vec_id")
         .localCheckpoint(false)
       val code = dims.filter($"vec_id" < G * K)
         .groupBy(expr("vec_id div 16").cast("int").as("j"), $"m", $"k")

@@ -40,10 +40,17 @@ class CubeRunSpec extends SparkSpec {
     // override must never leak into (or race with) the caller's session
     val coPartConf = "spark.sql.requireAllClusterKeysForCoPartition"
     val callerCoPart = spark.conf.getOption(coPartConf)
+    val scratchBefore = scratchState()
 
-    val r1 = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
-      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
-      tiles = Tiles.Fixed("t9"), blockSize = 32)
+    val (r1, decodedRows1, decodeShuffles) =
+      shuffleRecordsWrittenBy("cube:decode+bucket")(
+        CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+          java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+          tiles = Tiles.Fixed("t9"), blockSize = 32))
+    // the decoded block table's shuffle is released with the table
+    assert(decodedRows1 > 0 && decodeShuffles.nonEmpty)
+    assert((decodeShuffles & shufflesOnDisk()).isEmpty,
+      s"decode shuffles $decodeShuffles must be released when the run ends")
     // 2 periods × 2 spectral bands + QA? expected counts bands incl QA unit rows
     assert(r1.planned == 2 * 3)
     assert(r1.items == 2)   // one item per period
@@ -67,30 +74,56 @@ class CubeRunSpec extends SparkSpec {
     assert(r3.blocks == 4, s"force rebuild must not duplicate blocks, got ${r3.blocks}")
     assert(r3.items == 2, s"force rebuild must not duplicate items, got ${r3.items}")
 
-    // default runs clean up their scratch layout
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(outDir, "bucketed_blocks")),
-      "the scratch bucketed-block layout must be dropped after a run")
+    // completed and no-op runs alike release the Datasets they
+    // persisted and register no catalog table
+    assert(scratchState() == scratchBefore,
+      "a run must leave no persisted Dataset or catalog table behind")
 
-    // extending the range backfills only the new periods (C4);
-    // keepBucketed exposes the scratch table so the date prune is
-    // observable
-    val r4 = CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
-      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 2, 15),
-      tiles = Tiles.Fixed("t9"), blockSize = 32, keepBucketed = true)
+    // extending the range backfills only the new periods (C4)
+    val (r4, decodedRows, _) = shuffleRecordsWrittenBy("cube:decode+bucket")(
+      CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir,
+        java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 2, 15),
+        tiles = Tiles.Fixed("t9"), blockSize = 32))
     assert(r4.planned == 3) // one new period × 3 bands
 
     // the backfill decoded NOTHING: its pending period (Feb) has no
     // scenes, and the date prune keeps the whole Jan archive out of the
-    // decode — the persisted block table (overwritten per run) is empty
-    val bucketDir = java.nio.file.Paths.get(outDir, "bucketed_blocks")
-    val stream = java.nio.file.Files.list(bucketDir)
-    val bucketFiles =
-      try stream.toArray.map(_.toString).filter(_.endsWith(".parquet"))
-      finally stream.close()
-    assert(bucketFiles.isEmpty,
+    // decode — no block row reaches the block table's shuffle
+    assert(decodedRows == 0L,
       "incremental backfill must not re-decode out-of-window scenes, " +
-        s"found ${bucketFiles.length} block files")
+        s"$decodedRows block rows shuffled")
+  }
+
+  test("a run that fails after decode releases its persisted Datasets") {
+    val sceneDir = java.nio.file.Files.createTempDirectory("fail_scenes")
+    val outDir = java.nio.file.Files.createTempDirectory("fail_out").toString
+    for ((date, seed) <- Seq(("20200105", 1), ("20200120", 2));
+         band <- Seq("B04", "B8A", "QA")) {
+      val px = Array.tabulate(32 * 32)(i =>
+        if (band == "QA") 0 else 100 + (i * 7 + seed * 13) % 900)
+      java.nio.file.Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"),
+        GeoTiff.write(px, 32, 32, tileSize = 32, originX = 0, originY = 320,
+          scaleX = 10, scaleY = 10, nodata = if (band == "QA") 255 else nodata))
+    }
+    // a regular file where the blocks table goes: decode and the
+    // quarantine check succeed, then the blocks write throws
+    java.nio.file.Files.write(java.nio.file.Paths.get(outDir, "blocks"),
+      Array[Byte](1))
+    val before = scratchState()
+    val (_, decodedRows, decodeShuffles) =
+      shuffleRecordsWrittenBy("cube:decode+bucket")(
+        intercept[Exception](CubeRun.runTiles(spark, coll, mask,
+          sceneDir.toString, outDir, java.time.LocalDate.of(2020, 1, 1),
+          java.time.LocalDate.of(2020, 1, 31), tiles = Tiles.Fixed("t9"),
+          blockSize = 32)))
+    // the run got as far as filling the block table before it threw
+    assert(decodedRows == 2 * 3,
+      s"2 dates × 3 bands of one block must reach the block table, " +
+        s"got $decodedRows rows")
+    assert(scratchState() == before,
+      "a failed run must release its persisted Datasets")
+    assert((decodeShuffles & shufflesOnDisk()).isEmpty,
+      s"a failed run must release its decode shuffles $decodeShuffles")
   }
 
   test("a legacy (pre-pointer) flat-parquet ledger resumes instead of " +
@@ -544,27 +577,23 @@ class CubeRunSpec extends SparkSpec {
     assert(go().planned == 0)
   }
 
-  test("merge→composite over the bucketed block table plans ZERO Exchange") {
-    // the production chain runTiles() executes: decoded blocks persisted
-    // bucketed on (tileId, blockY, blockX), then per-slice merges, the
-    // spectral↔quality join and the composite groupBy must all inherit
-    // the scan's HashPartitioning — one write-side shuffle for the whole
-    // tile lifecycle, the layout a 1000-executor job wants
+  test("merge→composite over the clustered block table plans ZERO Exchange") {
+    // the production chain runTiles() executes: decoded blocks clustered
+    // on (tileId, blockY, blockX) by CubeRun.clusterBlocks, then
+    // per-slice merges, the spectral↔quality join and the composite
+    // groupBy must all inherit its HashPartitioning — one shuffle for
+    // the whole tile lifecycle, the layout a 1000-executor job wants
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("run_bucket").toString
     val rows = for {
       date <- Seq("2020-01-05", "2020-01-20"); band <- Seq("B04", "B8A", "QA")
       by <- 0 until 2; bx <- 0 until 2
     } yield ("run_V1", "t9", java.sql.Date.valueOf(date), band, by, bx,
       16, 16, bx * 160.0, 320.0 - by * 160.0, 10.0, 10.0, nodata,
       Array.tabulate(256)(i => if (band == "QA") i % 5 else 100 + i), 0, 0)
-    val blocks = graft.operators.Scale.persistBucketed(
+    val blocks = CubeRun.clusterBlocks(
       rows.toDF("cube", "tileId", "date", "band", "blockY", "blockX",
         "height", "width", "x0", "y0", "resX", "resY", "nodata", "pixels",
-        "assetOrder", "source"),
-      "cube_blocks", s"$tmp/bucketed_blocks", 8,
-      Seq("tileId", "blockY", "blockX"))
+        "assetOrder", "source"), 8)
     val periods = Seq(("2020-01-01", "2020-01-16"), ("2020-01-17", "2020-02-01"))
       .toDF("ps", "pe")
       .select($"ps".cast("date").as("p_start"), $"pe".cast("date").as("p_end"))
@@ -592,6 +621,7 @@ class CubeRunSpec extends SparkSpec {
         s"no-broadcast chain must co-partition on the bucket subset, got " +
           s"$n2:\n${c2.queryExecution.executedPlan}")
     } finally {
+      org.apache.spark.sql.graftbridge.ShuffledScan.release(blocks)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
       prevC match {
         case Some(v) =>

@@ -210,26 +210,23 @@ class CubeStreamSpec extends SparkSpec {
     val end = java.time.LocalDate.of(2020, 12, 31)
     def run(h: java.time.LocalDate): CubeRun.RunResult =
       CubeRun.runTiles(spark, coll, mask, sceneDir.toString, outDir, start, end,
-        tiles = Tiles.Fixed("t9"), blockSize = 32, keepBucketed = true,
-        horizon = Some(h))
+        tiles = Tiles.Fixed("t9"), blockSize = 32, horizon = Some(h))
     // build the 8-period history (horizon = day after scene 7's period)
     val r0 = run(start.plusDays(16L * 8))
     assert(r0.planned == 8 * 3 && r0.items == 8)
     // the NEW scene arrives, closing period 9
     drop(8)
-    val r1 = run(start.plusDays(16L * 9))
+    val (r1, decodedRows, decodeShuffles) =
+      shuffleRecordsWrittenBy("cube:decode+bucket")(run(start.plusDays(16L * 9)))
     assert(r1.planned == 3 && r1.items == 9)
-    // the incremental run decoded ONLY the new scene: the persisted
-    // bucketed block table (overwritten per run) holds exactly the new
-    // period's 3 band blocks, not the 27-file archive's
-    val decoded = spark.read.parquet(s"$outDir/bucketed_blocks")
-    assert(decoded.count() == 3L,
-      s"incremental decode must be the new scene only, got ${decoded.count()}")
-    import org.apache.spark.sql.functions._
-    val dates = decoded.select(col("date").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(dates == Set(java.time.LocalDate.of(2020, 1, 2)
-      .plusDays(16L * 8).toString), s"wrong window decoded: $dates")
+    // the incremental run decoded ONLY the new scene: exactly the new
+    // period's 3 band blocks reach the block table's shuffle, not the
+    // 27-file archive's
+    assert(decodedRows == 3L,
+      s"incremental decode must be the new scene only, got $decodedRows rows")
+    // and the wave leaves no copy of its decoded blocks in the local dirs
+    assert(decodeShuffles.nonEmpty && (decodeShuffles & shufflesOnDisk()).isEmpty,
+      s"decode shuffles $decodeShuffles must be released when the run ends")
   }
 
   test("lateness slack delays readiness: a period closes only once the " +

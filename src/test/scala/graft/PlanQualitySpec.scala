@@ -184,6 +184,14 @@ class PlanQualitySpec extends SparkSpec {
     val bnlj = "BroadcastNestedLoopJoin".r.findAllMatchIn(plan).size
     assert(bnlj <= 1,
       s"only the 3-row exact-audit crossJoin may nested-loop, got $bnlj:\n$plan")
+    // the checkpointed dims report no partitioning: ip, codes and adc
+    // each shuffle on their own keys, and the final plan holds 9
+    // exchanges (a pre-checkpoint repartition would not lower this)
+    val df = q("v_ann_pq")
+    df.collect() // finalize AQE on THIS QueryExecution
+    val n = graft.operators.Scale.shuffleExchangeCount(df)
+    assert(n == 9, s"v_ann_pq must plan 9 exchanges, got $n:\n" +
+      df.queryExecution.executedPlan)
   }
 
   test("v_ann_lsh: corpus side never self-joins or nested-loops") {

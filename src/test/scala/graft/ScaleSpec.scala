@@ -32,37 +32,6 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("persistBucketed: multi-key clustering carries superset groupBys " +
-       "shuffle-free; re-runs overwrite without catalog leaks") {
-    val sparkS = spark
-    import sparkS.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pb").toString
-    val df1 = spark.range(0, 400).select(
-      ($"id" % 4).as("a"), ($"id" % 10).as("b"), $"id".as("v"))
-    val t1 = Scale.persistBucketed(df1, "pb_test", s"$tmp/t", 4, Seq("a", "b"))
-    val before = spark.catalog.listTables().count()
-    // same path → same derived table name → overwrite, not a second entry
-    val df2 = spark.range(0, 100).select(
-      ($"id" % 4).as("a"), ($"id" % 10).as("b"), $"id".as("v"))
-    val t2 = Scale.persistBucketed(df2, "pb_test", s"$tmp/t", 4, Seq("a", "b"))
-    assert(spark.catalog.listTables().count() == before,
-      "re-persisting the same path must overwrite its own catalog entry")
-    assert(t2.count() == 100, "second persist must replace the data")
-    // a groupBy on a SUPERSET of the bucket keys plans zero Exchange
-    val agg = t2.groupBy($"a", $"b", ($"v" % 2).as("p"))
-      .agg(org.apache.spark.sql.functions.sum($"v").as("s"))
-    assert(Scale.shuffleExchangeCount(agg) == 0,
-      s"superset groupBy must ride the bucket clustering:\n" +
-        agg.queryExecution.executedPlan)
-    assert(agg.count() == t2.select($"a", $"b", ($"v" % 2)).distinct().count())
-    val before2 = spark.catalog.listTables().count()
-    Scale.dropBucketed(spark, "pb_test", s"$tmp/t")
-    assert(spark.catalog.listTables().count() == before2 - 1,
-      "dropBucketed must remove the catalog entry")
-    assert(!new java.io.File(s"$tmp/t").exists(),
-      "dropBucketed must delete the data directory")
-  }
-
   test("salted join: same result as plain join, hot key spread over salts") {
     val sparkS = spark
     import sparkS.implicits._
