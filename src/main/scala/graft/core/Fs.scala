@@ -51,4 +51,16 @@ object Fs {
     java.nio.file.Files.write(tmp, bytes): Unit
     commitStagedTemp(tmp, dest)
   }
+
+  /** Delete `root` and everything under it, deepest first; a missing
+    * root is a no-op.
+    */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.toList.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally s.close()
+    }
 }

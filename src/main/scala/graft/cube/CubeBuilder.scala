@@ -238,8 +238,7 @@ object CubeBuilder {
         // a block missing a source band the expression reads (its scene
         // file absent from the archive) pivots that band to null and the
         // expression evaluates to a null pixels array; dropping the row
-        // here keeps the table total — same guard as quicklook's
-        // complete-band filter, which names this exact NPE hazard
+        // here keeps the table total
         .filter(col("value").isNotNull)
     }.reduce(_ unionByName _)
   }
@@ -331,139 +330,6 @@ object CubeBuilder {
             coalesce(element_at($"vmap", px), px))))
       .drop("vmap")
   }
-
-  /** Stage 3c — S11/S12 quicklook: stride-sample EACH BLOCK's three bands
-    * at the thumbnail grid FIRST, then P3-scale and ARGB-pack only the
-    * sampled pixels, then assemble the ≤`maxRows`-row thumbnail per
-    * (tile, period). Sampling precedes compositing on purpose: packing
-    * full-resolution blocks and then keeping one pixel in stride² did
-    * ~169× the needed per-pixel work at the 10560² reference tile, where
-    * the quicklook stage dominated the soak. Channel math matches
-    * [[graft.operators.Visual.rgbComposite]] bit-for-bit (clip → linear
-    * [0,255] → int truncation; transparent-nodata alpha, reference
-    * `processing.py:1291-1324`) — the full-resolution S12 composite
-    * remains available as `Visual.rgbComposite`. No row ever
-    * materializes a full tile: a block contributes
-    * ≤ ceil(bh/stride)×ceil(bw/stride) ARGB ints, and the assembly group
-    * collects ≤ maxRows² ints (~2.4 MB) regardless of tile size.
-    */
-  def quicklook(composited: DataFrame, collection: Collection,
-                inMin: Double, inMax: Double, maxRows: Int = 768): DataFrame = {
-    val spark = composited.sparkSession
-    import spark.implicits._
-    val Seq(r, g, b) = collection.quicklook.take(3)
-    val bands = composited.withColumn("value", compositeBand(collection))
-      .filter($"band".isin(r, g, b))
-
-    // Tile dimensions per item: tiny aggregate, broadcast back. Only the
-    // last block row/column can be truncated, so bh = max(height) and
-    // th = maxBlockY·bh + height(any block in that row). (Aggregated over
-    // the band rows rather than pivoted blocks — the per-band block grids
-    // are identical, so the maxes agree.)
-    val dims = bands.groupBy($"cube", $"tileId", $"p_start", $"p_end")
-      .agg(max($"height").as("bh"), max($"width").as("bw"),
-        (max($"blockY") * max($"height") + max_by($"height", $"blockY")).as("th"),
-        (max($"blockX") * max($"width") + max_by($"width", $"blockX")).as("tw"))
-
-    val patches = bands
-      .groupBy($"cube", $"tileId", $"p_start", $"p_end", $"blockY", $"blockX",
-        $"height", $"width")
-      .pivot("band", Seq(r, g, b).distinct)
-      .agg(first(struct($"value".as("v"), $"nodata".as("nd"))))
-      // a block missing any quicklook band (its scene file absent from
-      // the archive) pivots to a null struct; dropping it here keeps the
-      // typed map total — an item with no complete-band block emits no
-      // quicklook row rather than NPE-ing the publish stage
-      .filter(col(r).isNotNull && col(g).isNotNull && col(b).isNotNull)
-      .join(broadcast(dims), Seq("cube", "tileId", "p_start", "p_end"))
-      .select($"cube", $"tileId", $"p_start", $"p_end",
-        $"blockY", $"blockX", $"height", $"width", $"bh", $"bw", $"th", $"tw",
-        col(r).getField("v").as("rv"), col(r).getField("nd").as("rnd"),
-        col(g).getField("v").as("gv"), col(g).getField("nd").as("gnd"),
-        col(b).getField("v").as("bv"), col(b).getField("nd").as("bnd"))
-      .as[QlRgbBlock]
-      .map { blk =>
-        val stride = graft.operators.Visual.quicklookStride(blk.th, maxRows)
-        val qh = math.max(1, blk.th / stride)
-        val qw = math.max(1, blk.tw / stride)
-        val gy0 = blk.blockY * blk.bh
-        val gx0 = blk.blockX * blk.bw
-        // global stride-grid positions that fall inside this block
-        def gridIn(g0: Int, len: Int, qMax: Int): Array[Int] = {
-          val first = ((g0 + stride - 1) / stride) * stride
-          Iterator.iterate(first)(_ + stride)
-            .takeWhile(p => p < g0 + len && p / stride < qMax).toArray
-        }
-        // P3 channel scale, replicated to the same IEEE op sequence as
-        // Visual.rgbComposite's Column expression (clip, subtract,
-        // divide, multiply, add, truncate) so the two paths are
-        // bit-identical on every input
-        def chan(v: Int): Int = {
-          val clipped = math.min(math.max(v.toDouble, inMin), inMax)
-          ((clipped - inMin) / (inMax - inMin) * 255.0 + 0.0).toInt
-        }
-        val rows = gridIn(gy0, blk.height, qh)
-        val cols = gridIn(gx0, blk.width, qw)
-        val px = new Array[Int](rows.length * cols.length)
-        var i = 0
-        while (i < rows.length) {
-          var j = 0
-          while (j < cols.length) {
-            // only the SAMPLED pixel is scaled and packed — primitive
-            // Array[Int] fields, O(1) indexed reads (a Seq-of-struct here
-            // deserializes to a List whose O(n) apply made this quadratic)
-            val idx = (rows(i) - gy0) * blk.width + (cols(j) - gx0)
-            val rv = blk.rv(idx); val gv = blk.gv(idx); val bv = blk.bv(idx)
-            val a =
-              if (rv == blk.rnd && gv == blk.gnd && bv == blk.bnd) 0 else 255
-            px(i * cols.length + j) =
-              (a << 24) | (chan(rv) << 16) | (chan(gv) << 8) | chan(bv)
-            j += 1
-          }
-          i += 1
-        }
-        QlPatch(blk.cube, blk.tileId, blk.p_start.toString, blk.p_end.toString,
-          qh, qw,
-          if (rows.isEmpty) 0 else rows(0) / stride,
-          if (cols.isEmpty) 0 else cols(0) / stride,
-          rows.length, cols.length, px)
-      }
-      .filter(p => p.ph > 0 && p.pw > 0)
-
-    patches
-      .groupByKey(p => (p.cube, p.tileId, p.p_start, p.p_end))
-      .mapGroups { (key: (String, String, String, String), it: Iterator[QlPatch]) =>
-        val (cube, tile, ps, pe) = key
-        var qh = 0; var qw = 0
-        var canvas: Array[Int] = null
-        it.foreach { p =>
-          if (canvas == null) { qh = p.qh; qw = p.qw; canvas = new Array[Int](qh * qw) }
-          var i = 0
-          while (i < p.ph) {
-            System.arraycopy(p.px, i * p.pw, canvas, (p.qy0 + i) * qw + p.qx0, p.pw)
-            i += 1
-          }
-        }
-        (cube, tile, ps, pe, graft.operators.Visual.encodePngArgb(canvas, qw, qh))
-      }
-      .toDF("cube", "tileId", "p_start", "p_end", "png")
-  }
-
-  /** One pivoted block with all three quicklook bands — pixel payloads as
-    * primitive Array[Int] (NEVER Seq-of-struct: the Seq encoder's List
-    * has O(n) apply, which made the stride sampler quadratic once).
-    */
-  final case class QlRgbBlock(cube: String, tileId: String,
-                              p_start: java.sql.Date, p_end: java.sql.Date,
-                              blockY: Int, blockX: Int, height: Int, width: Int,
-                              bh: Int, bw: Int, th: Int, tw: Int,
-                              rv: Array[Int], rnd: Int,
-                              gv: Array[Int], gnd: Int,
-                              bv: Array[Int], bnd: Int)
-  final case class QlPatch(cube: String, tileId: String,
-                           p_start: String, p_end: String,
-                           qh: Int, qw: Int, qy0: Int, qx0: Int,
-                           ph: Int, pw: Int, px: Array[Int])
 
   /** Period dimension table from the collection's temporal schema (C12). */
   def periodTable(spark: SparkSession, collection: Collection,

@@ -1,6 +1,6 @@
 package graft.cube
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Ledger
 import graft.model.{Collection, MaskDef}
@@ -123,9 +123,11 @@ object CubeRun {
                  * `outDir/data` via the crash-safe work→data commit
                  * ([[Publish.publishGeoTiffs]]) */
                publishCogs: Boolean = false,
-               /** with [[publishCogs]]: also stage an S11 quicklook PNG
-                 * per item (requires `collection.quicklook` RGB band
-                 * names), scaled over this (inMin, inMax) display range */
+               /** with [[publishCogs]]: also publish an S11 quicklook PNG
+                 * per item, rendered from the item's own
+                 * `collection.quicklook` (r, g, b) band COGs
+                 * ([[Publish.renderQuicklook]]) and scaled over this
+                 * (inMin, inMax) display range */
                quicklookRange: Option[(Double, Double)] = None,
                /** T1 scene ordering: blend clearer scenes first instead
                  * of the later-date default (see [[mergeCompositeChain]]) */
@@ -168,7 +170,7 @@ object CubeRun {
     // fail the misconfiguration BEFORE any heavy stage: a quicklook
     // request against a collection with fewer than 3 configured bands
     // would otherwise complete scan/decode/merge/composite and die in
-    // publish:quicklook with an opaque MatchError on Seq(r, g, b)
+    // the item commit with an opaque MatchError on Seq(r, g, b)
     quicklookRange.foreach { _ =>
       require(collection.quicklook.size >= 3,
         s"quicklookRange set but collection '${collection.name}' " +
@@ -496,7 +498,7 @@ object CubeRun {
           .parquet(s"$outDir/blocks"))
       // The merge→composite chain executes exactly ONCE per run — the
       // blocks write above. Every later publication stage (index bands,
-      // items, COGs, quicklooks) reads BACK the partitions just written
+      // items, COGs) reads BACK the partitions just written
       // instead of re-running the composite from the block table: at
       // cube scale the composite aggregation over the full scene stack is
       // the dominant cost, and items alone used to pay it a second time
@@ -635,36 +637,13 @@ object CubeRun {
             .select($"cube", $"tileId", $"band", $"p_start", $"blockY",
               $"blockX", $"height", $"width", $"x0", $"y0", $"resX", $"resY",
               $"nodata", $"value".as("pixels")))
-        // quicklooks stage into the item work dirs FIRST, so the per-item
-        // commit below moves the PNG together with the band set — an item
-        // is never visible without its quicklook. The write runs on the
-        // executors (the same shared-filesystem contract writeGeoTiffs
-        // already relies on): one row per (tile, period) item, but each
-        // row carries a whole PNG, so routing them through a driver-side
-        // collect would make the driver the byte funnel for every
-        // thumbnail in the run — at production item counts that is
-        // items × ~100 KB of driver heap plus a serial write loop.
-        for ((inMin, inMax) <- quicklookRange) {
-          val workRoot = s"$outDir/work"
-          stage(spark, "publish:quicklook")(
-            CubeBuilder.quicklook(pubSource, collection, inMin, inMax)
-              .foreachPartition { (rows: Iterator[Row]) =>
-                rows.foreach { row =>
-                  val dir = Publish.itemWorkDir(workRoot, row.getString(0),
-                    row.getString(1), row.getString(2))
-                  java.nio.file.Files.createDirectories(dir)
-                  // temp-sibling + atomic rename: a duplicate attempt killed
-                  // mid-write must never leave a torn PNG under the staged
-                  // name for the item commit to publish
-                  graft.core.Fs.writeAtomic(
-                    dir.resolve(s"${row.getString(0)}_${row.getString(1)}_" +
-                      s"${row.getString(2)}_quicklook.png"),
-                    row.getAs[Array[Byte]](4))
-                }
-              })
-        }
+        // each item's quicklook renders in its commit task, from the
+        // band files it just staged, so the PNG commits with the band set
         stage(spark, "publish:cogs")(
-          Publish.publishGeoTiffs(withIndex, s"$outDir/work", s"$outDir/data"))
+          Publish.publishGeoTiffs(withIndex, s"$outDir/work", s"$outDir/data",
+            collection.bands.map(b => b.name -> b.dataType).toMap,
+            quicklookBands = collection.quicklook.take(3),
+            quicklookRange = quicklookRange))
       }
 
       // every planned unit ledgers: SUCCESS normally, ERROR when its
@@ -684,9 +663,10 @@ object CubeRun {
               .otherwise(lit(Ledger.StatusSuccess)))
           .drop("__et", "__ep")
       }
-      val errorCount =
-        if (erroredSet.isEmpty) 0L
-        else completions.filter($"status" === Ledger.StatusError).count()
+      // the ERROR rows of `completions`, counted from the plan rollup
+      val errorCount = unitCounts
+        .filter(r => erroredSet(s"${r.getString(0)}|${r.getString(1)}"))
+        .map(_.getLong(3)).sum
       stage(spark, "publish:ledger")(
         Ledger.commitVersion(spark, ledgerPath, Ledger.upsert(ledger, completions)))
 

@@ -118,6 +118,78 @@ object Publish {
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** S11 — render one item's quicklook PNG from its staged `rgb` band
+    * files (reference `generate_quick_look`, `processing.py:1291-1324`).
+    * The thumbnail is the raster's global stride grid
+    * ([[graft.operators.Visual.quicklookStride]] over the tallest file,
+    * ≤`maxRows` rows), sampled tile by tile so only one decoded TIFF tile
+    * per file is held at a time. Each sample is P3-scaled to 0..255 with
+    * the channel arithmetic of [[graft.operators.Visual.rgbComposite]]
+    * and packed ARGB, transparent where all three bands read their
+    * file's `GDAL_NODATA`. A sample that lies in a sparse tile, or
+    * outside any one file's grid, stays transparent black. None when a
+    * file is missing or no sample is covered by all three files.
+    */
+  def renderQuicklook(rgb: Seq[Path], inMin: Double, inMax: Double,
+                      maxRows: Int = 768): Option[Array[Byte]] = {
+    import graft.sources.{GeoTiff, RasterIO}
+    if (!rgb.forall(Files.isRegularFile(_))) return None
+    val files = rgb.distinct
+    val bufs = scala.collection.mutable.ArrayBuffer.empty[java.nio.ByteBuffer]
+    try {
+      files.foreach(f => bufs += RasterIO.mapScene(f.toString))
+      val infos = bufs.map(GeoTiff.readInfo(_))
+      val stride = graft.operators.Visual.quicklookStride(
+        infos.map(_.height).max, maxRows)
+      val qh = math.max(1, infos.map(_.height).max / stride)
+      val qw = math.max(1, infos.map(_.width).max / stride)
+      // per file, its sampled values; per sample, how many files cover it
+      val hits = new Array[Int](qh * qw)
+      val values = files.indices.map { f =>
+        val (bb, info) = (bufs(f), infos(f))
+        val v = new Array[Int](qh * qw)
+        // stride-grid indices q (below qMax) whose position q·stride lies
+        // in [from, until)
+        def grid(from: Int, until: Int, qMax: Int): Range =
+          (from + stride - 1) / stride until
+            math.min(qMax, (until + stride - 1) / stride)
+        val across = (info.width + info.tileWidth - 1) / info.tileWidth
+        val down = (info.height + info.tileHeight - 1) / info.tileHeight
+        for (ty <- 0 until down; tx <- 0 until across) {
+          val t = ty * across + tx
+          val y0 = ty * info.tileHeight; val x0 = tx * info.tileWidth
+          val rows = grid(y0, math.min(y0 + info.tileHeight, info.height), qh)
+          val cols = grid(x0, math.min(x0 + info.tileWidth, info.width), qw)
+          if (info.tileOffsets(t) > 0 && info.tileByteCounts(t) > 0 &&
+              rows.nonEmpty && cols.nonEmpty) {
+            val tile = GeoTiff.readTile(bb, info, ty, tx)
+            for (qy <- rows; qx <- cols) {
+              v(qy * qw + qx) =
+                tile((qy * stride - y0) * info.tileWidth + qx * stride - x0)
+              hits(qy * qw + qx) += 1
+            }
+          }
+        }
+        v
+      }
+      if (!hits.contains(files.size)) return None
+      val Seq(r, g, b) = rgb.map(files.indexOf(_))
+      def nodata(f: Int, i: Int) = values(f)(i) == infos(f).nodata
+      // P3 channel scale: clip, then the same IEEE op sequence as
+      // Visual.rgbComposite's linearScaleS + int cast
+      def chan(f: Int, i: Int): Int = {
+        val clipped = math.min(math.max(values(f)(i).toDouble, inMin), inMax)
+        ((clipped - inMin) / (inMax - inMin) * 255.0 + 0.0).toInt
+      }
+      val argb = new Array[Int](qh * qw)
+      for (i <- argb.indices if hits(i) == files.size) {
+        val a = if (nodata(r, i) && nodata(g, i) && nodata(b, i)) 0 else 255
+        argb(i) = (a << 24) | (chan(r, i) << 16) | (chan(g, i) << 8) | chan(b, i)
+      }
+      Some(graft.operators.Visual.encodePngArgb(argb, qw, qh))
+    } finally bufs.foreach(RasterIO.unmapScene)
+  }
+
   /** Stage composite blocks as GeoTIFFs in the work root and commit each
     * (cube, tile, period) item into the data root — S9 write + C2 commit.
     * The write lands in per-item directories
@@ -127,12 +199,18 @@ object Publish {
     * `files_to_move`-after-commit granularity (`processing.py:1038-1155`).
     * Items commit in parallel on the executors (each task moves whole
     * items); a crash mid-publication leaves some items fully published
-    * and the rest absent — no item is ever half-visible.
+    * and the rest absent — no item is ever half-visible. With
+    * `quicklookRange`, the commit task first renders the item's
+    * quicklook PNG from its staged `quicklookBands` (r, g, b) files
+    * ([[renderQuicklook]]), so the PNG commits with the band set.
     */
   def publishGeoTiffs(blocks: DataFrame, workRoot: String, dataRoot: String,
-                      periodCols: Seq[String] = Seq("p_start")): Seq[Path] = {
-    graft.sources.RasterIO.writeGeoTiffs(blocks, workRoot, periodCols,
-      itemTree = true)
+                      bandTypes: String => String,
+                      periodCols: Seq[String] = Seq("p_start"),
+                      quicklookBands: Seq[String] = Nil,
+                      quicklookRange: Option[(Double, Double)] = None): Seq[Path] = {
+    graft.sources.RasterIO.writeGeoTiffs(blocks, workRoot, bandTypes,
+      periodCols, itemTree = true)
     val work = Paths.get(workRoot)
     val depth = 2 + periodCols.size // cube / tile / period…
     val itemDirs =
@@ -165,13 +243,33 @@ object Publish {
         sc.parallelize(itemDirs.map(_.toString), slices)
           .flatMap { d =>
             val dir = Paths.get(d)
-            commitItem(dir, Paths.get(dataRoot)
-              .resolve(Paths.get(workRootStr).relativize(dir)))
-              .map(_.toString)
+            val rel = Paths.get(workRootStr).relativize(dir)
+            for ((inMin, inMax) <- quicklookRange)
+              stageQuicklook(dir, rel, quicklookBands, inMin, inMax)
+            commitItem(dir, Paths.get(dataRoot).resolve(rel)).map(_.toString)
           }
           .collect().toSeq.map(Paths.get(_))
       }
     cleanEmpty(work)
     moved
+  }
+
+  /** Render the quicklook of the item staged at `dir` (`rel` =
+    * cube/tile/period… under the work root) into it, under the name
+    * `<cube>_<tile>_<period…>_quicklook.png`; the band files follow
+    * [[graft.sources.RasterIO.writeGeoTiffs]]' `<cube>_<tile>_<band>_<period…>.tif`.
+    * A duplicate attempt that finds the band files already moved skips
+    * the render: the attempt that moved them rendered first.
+    */
+  private def stageQuicklook(dir: Path, rel: Path, rgb: Seq[String],
+                             inMin: Double, inMax: Double): Unit = {
+    val parts = rel.iterator().asScala.map(_.toString).toSeq
+    val (cube, tile, period) = (parts(0), parts(1), parts.drop(2))
+    val files = rgb.map(band =>
+      dir.resolve((Seq(cube, tile, band) ++ period).mkString("_") + ".tif"))
+    try renderQuicklook(files, inMin, inMax).foreach { png =>
+      graft.core.Fs.writeAtomic(dir.resolve(
+        (Seq(cube, tile) ++ period).mkString("_") + "_quicklook.png"), png)
+    } catch { case _: java.nio.file.NoSuchFileException => () }
   }
 }

@@ -24,16 +24,14 @@ object Visual {
     * (`cube_builder/utils/processing.py:1291-1324`).
     *
     * This is the FULL-RESOLUTION composite (every pixel packs); the
-    * quicklook path does not use it — it stride-samples first and packs
-    * only sampled pixels with bit-identical channel math
-    * ([[graft.cube.CubeBuilder.quicklook]]). One int per pixel, not a
-    * struct: consumers random-access pixels by index, and an
-    * array-of-struct column deserializes through the Seq encoder into a
-    * LIST — O(n) apply() turned a downstream sampler quadratic once
-    * (175 s for two 512x512 quicklooks, measured). `Array[Int]`
-    * round-trips the encoder as a primitive array: O(1) indexing, no
-    * per-pixel boxing, and the pack is the same
-    * (a<<24)|(r<<16)|(g<<8)|b BufferedImage expects.
+    * quicklook does not use it — it stride-samples the item's published
+    * band files and packs only the sampled pixels with bit-identical
+    * channel math ([[graft.cube.Publish.renderQuicklook]]). One int per
+    * pixel, not a struct: consumers random-access pixels by index, and
+    * an array-of-struct column deserializes through the Seq encoder into
+    * a LIST with O(n) apply(). `Array[Int]` round-trips the encoder as a
+    * primitive array: O(1) indexing, no per-pixel boxing, and the pack is
+    * the same (a<<24)|(r<<16)|(g<<8)|b BufferedImage expects.
     */
   def rgbComposite(blocks: DataFrame, rBand: String, gBand: String, bBand: String,
                    inMin: Double, inMax: Double): DataFrame = {

@@ -240,17 +240,13 @@ object EngineOps {
         .orderBy($"archive", $"band")
     }),
 
-    // S11/S12 — quicklook: P3-scaled RGB composite, per-block stride
-    // downsample, ARGB PNG encode; the query decodes the PNG back and
-    // pins channel sums (transparent-nodata alpha included)
+    // S11/S12 — quicklook: the blocks publish as item-tree GeoTIFFs, the
+    // item's quicklook renders from its three band files (global stride
+    // grid, P3 scaling, ARGB PNG encode); the query decodes the PNG back
+    // and pins channel sums (transparent-nodata alpha included)
     "s11_quicklook_png" -> ((s, d) => {
       import s.implicits._
-      val coll = Collection(name = "ql", version = 1, grid = "G",
-        compositeFunction = "LCF", temporalSchema = "Continuous",
-        temporalUnit = "day", temporalStep = 16,
-        bands = Seq(Band("B8A", "nir", "int16", Nodata),
-          Band("B04", "red", "int16", Nodata)),
-        quicklook = Seq("B8A", "B04", "B04"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft_ql")
       val rows = for {
         (by, bx, h, w) <- graft.raster.Raster.blockWindows(96, 96, 32)
         band <- Seq("B8A", "B04")
@@ -261,25 +257,34 @@ object EngineOps {
           else if (band == "B8A") (gy * 7 + gx * 13) % 1000
           else (gy * 11 + gx * 3) % 1000
         }
-        ("c", "t1", java.sql.Date.valueOf("2020-01-01"),
-          java.sql.Date.valueOf("2020-01-16"), by, bx, h, w, band, Nodata, px)
+        ("c", "t1", "2020-01-01", by, bx, h, w, bx * 320.0, 960.0 - by * 320.0,
+          10.0, 10.0, band, Nodata, px)
       }
-      val composited = rows.toDF("cube", "tileId", "p_start", "p_end",
-        "blockY", "blockX", "height", "width", "band", "nodata", "value")
-      CubeBuilder.quicklook(composited, coll, 0, 1000, maxRows = 48)
-        .as[(String, String, String, String, Array[Byte])]
-        .map { case (cube, tile, ps, pe, png) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(png))
-          var rs, gs, as = 0L
-          for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) {
-            val p = img.getRGB(x, y)
-            rs += (p >> 16) & 0xff; gs += (p >> 8) & 0xff
-            as += (p >>> 24) & 0xff
-          }
-          (cube, tile, ps, pe, img.getWidth, img.getHeight, rs, gs, as)
+      val png =
+        try {
+          graft.sources.RasterIO.writeGeoTiffs(
+            rows.toDF("cube", "tileId", "p_start", "blockY", "blockX",
+              "height", "width", "x0", "y0", "resX", "resY", "band",
+              "nodata", "pixels"),
+            tmp.toString, _ => "int16", periodCols = Seq("p_start"),
+            itemTree = true)
+          val item = tmp.resolve("c/t1/2020-01-01")
+          graft.cube.Publish.renderQuicklook(Seq("B8A", "B04", "B04")
+            .map(b => item.resolve(s"c_t1_${b}_2020-01-01.tif")),
+            0, 1000, maxRows = 48)
+        } finally graft.core.Fs.deleteTree(tmp)
+      png.toSeq.map { bytes =>
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(bytes))
+        var rs, gs, as = 0L
+        for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) {
+          val p = img.getRGB(x, y)
+          rs += (p >> 16) & 0xff; gs += (p >> 8) & 0xff
+          as += (p >>> 24) & 0xff
         }
-        .toDF("cube", "tile_id", "p_start", "p_end", "qw", "qh",
+        ("c", "t1", "2020-01-01", "2020-01-16", img.getWidth, img.getHeight,
+          rs, gs, as)
+      }.toDF("cube", "tile_id", "p_start", "p_end", "qw", "qh",
           "r_sum", "g_sum", "a_sum")
         .orderBy($"tile_id")
     }),
@@ -375,7 +380,8 @@ object EngineOps {
       }).toDF("cube", "tileId", "date", "band", "blockY", "blockX", "height",
         "width", "x0", "y0", "resX", "resY", "nodata", "pixels")
         .withColumn("dkey", date_format($"date", "yyyyMMdd"))
-      graft.sources.RasterIO.writeGeoTiffs(blocks, tmp, periodCols = Seq("dkey"))
+      graft.sources.RasterIO.writeGeoTiffs(blocks, tmp, _ => "int16",
+        periodCols = Seq("dkey"))
       val scanned = graft.sources.RasterIO.scanDirectory(s, tmp,
         bandPattern = "_(B[0-9A-Z]+|QA)_")
       val integrity = scanned.select($"band", $"path")

@@ -13,6 +13,14 @@ final class BigTiffRequired(size: Long)
       s"raster needs BigTIFF: encoded size $size exceeds the 4 GB classic-TIFF" +
         " offset limit — shrink the tile, enable deflate, or split the output")
 
+/** A sample the file's declared sample type cannot hold. The writer fails
+  * loudly with this instead of narrowing it to a wrapped value.
+  */
+final class SampleOutOfRange(value: Int, bitsPerSample: Int, sampleFormat: Int)
+    extends RuntimeException(
+      s"sample $value does not fit ${if (sampleFormat == 2) "int" else "uint"}" +
+        s"$bitsPerSample — declare a wider band data type")
+
 /** S9 — incremental single-band tiled GeoTIFF/COG writer.
   *
   * Blocks stream in one at a time (any order; one block = one TIFF tile)
@@ -43,6 +51,13 @@ final class GeoTiffStreamWriter(
     internalMask: Boolean = false) {
 
   private val bytesPerSample = bitsPerSample / 8
+  // the samples this layout holds; 32-bit holds every Int
+  private val (minSample, maxSample) = (bitsPerSample, sampleFormat) match {
+    case (8, _)  => (0, 0xff)
+    case (16, 2) => (Short.MinValue.toInt, Short.MaxValue.toInt)
+    case (16, _) => (0, 0xffff)
+    case _       => (Int.MinValue, Int.MaxValue)
+  }
   private val raf = new java.io.RandomAccessFile(path.toFile, "rw")
   raf.setLength(0)
   raf.seek(8) // header written last, once the IFD offset is known
@@ -88,13 +103,18 @@ final class GeoTiffStreamWriter(
       java.util.Arrays.copyOf(buf, n)
     } else raw
 
+  private def checked(v: Int): Int =
+    if (v < minSample || v > maxSample)
+      throw new SampleOutOfRange(v, bitsPerSample, sampleFormat)
+    else v
+
   private def encodeTile(padded: Array[Int]): Array[Byte] = {
     val raw = ByteBuffer.allocate(tileWidth * tileHeight * bytesPerSample)
       .order(ByteOrder.LITTLE_ENDIAN)
     var i = 0
     bitsPerSample match {
-      case 8 => while (i < padded.length) { raw.put(padded(i).toByte); i += 1 }
-      case 16 => while (i < padded.length) { raw.putShort(padded(i).toShort); i += 1 }
+      case 8 => while (i < padded.length) { raw.put(checked(padded(i)).toByte); i += 1 }
+      case 16 => while (i < padded.length) { raw.putShort(checked(padded(i)).toShort); i += 1 }
       case 32 => while (i < padded.length) { raw.putInt(padded(i)); i += 1 }
       case b => throw new IllegalArgumentException(s"unsupported bits/sample: $b")
     }
@@ -341,5 +361,22 @@ final class GeoTiffStreamWriter(
     raf.write(header.array())
     raf.close()
     totalLen
+  }
+}
+
+object GeoTiffStreamWriter {
+
+  /** (bitsPerSample, sampleFormat) of a band's declared data type
+    * (`graft.model.Band.dataType`): the types [[GeoTiff.readTile]]
+    * decodes back to the same Int.
+    */
+  def sampleLayout(dataType: String): (Int, Int) = dataType match {
+    case "uint8"  => (8, 1)
+    case "int16"  => (16, 2)
+    case "uint16" => (16, 1)
+    case "int32"  => (32, 2)
+    case t => throw new IllegalArgumentException(
+      s"no GeoTIFF sample layout for band data type '$t' " +
+        "(uint8, int16, uint16 and int32 are written)")
   }
 }

@@ -83,7 +83,7 @@ object RasterIO {
     * truncating a MAPPED file turns it into a JVM-killing SIGBUS rather
     * than a catchable decode error.
     */
-  private def mapScene(path: String): java.nio.ByteBuffer = {
+  private[graft] def mapScene(path: String): java.nio.ByteBuffer = {
     val ch = java.nio.channels.FileChannel.open(
       scenePath(path), java.nio.file.StandardOpenOption.READ)
     try {
@@ -105,7 +105,7 @@ object RasterIO {
     * the supported JDK 9+ way to drop one deterministically. Failures
     * fall back to GC unmapping.
     */
-  private def unmapScene(bb: java.nio.ByteBuffer): Unit =
+  private[graft] def unmapScene(bb: java.nio.ByteBuffer): Unit =
     if (bb.isDirect)
       try RasterIO.unsafe.invokeCleaner(bb)
       catch { case scala.util.control.NonFatal(_) => () }
@@ -263,8 +263,12 @@ object RasterIO {
     * tile per block. Peak memory per task is one block (~1 MB), never a
     * full tile raster — a 10560² reference tile streams through unchanged.
     * The block grid IS the TIFF tile grid; overviews build at close.
+    * Each file's samples take its band's declared data type
+    * (`bandTypes`, band name → `Band.dataType`); a sample that type cannot
+    * hold fails the write ([[SampleOutOfRange]]).
     */
   def writeGeoTiffs(blocks: DataFrame, outDir: String,
+                    bandTypes: String => String,
                     periodCols: Seq[String] = Seq("date"),
                     deflate: Boolean = true,
                     overviews: Boolean = true,
@@ -283,7 +287,7 @@ object RasterIO {
         if (itemTree) concat_ws("/", dirCols.map(c => col(c).cast("string")): _*)
         else lit(""))
       .select($"k", $"blockY", $"blockX", $"height", $"width",
-        $"x0", $"y0", $"resX", $"resY", $"nodata", $"pixels", $"dirk")
+        $"x0", $"y0", $"resX", $"resY", $"nodata", $"pixels", $"dirk", $"band")
       .repartition($"k")
       .sortWithinPartitions($"k", $"blockY", $"blockX")
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
@@ -315,7 +319,7 @@ object RasterIO {
         failing {
         rows.foreach { row =>
           // columns: k, blockY, blockX, height, width, x0, y0, resX, resY,
-          //          nodata, pixels, dirk
+          //          nodata, pixels, dirk, band
           val k = row.getString(0)
           val by = row.getInt(1); val bx = row.getInt(2)
           val h = row.getInt(3); val w = row.getInt(4)
@@ -327,8 +331,10 @@ object RasterIO {
             tmp = graft.core.Fs.stagedTempFor(dest)
             // sorted order ⇒ the first block is (minY, minX): full-size
             // unless the raster itself is narrower than one block
+            val (bits, format) =
+              GeoTiffStreamWriter.sampleLayout(bandTypes(row.getString(12)))
             writer = new GeoTiffStreamWriter(tmp, tileWidth = w, tileHeight = h,
-              bitsPerSample = 16, sampleFormat = 2,
+              bitsPerSample = bits, sampleFormat = format,
               nodata = row.getInt(9).toDouble, deflate = deflate,
               overviews = overviews)
             sx = row.getDouble(7); sy = row.getDouble(8)

@@ -195,11 +195,41 @@ class CubeBuilderSpec extends SparkSpec {
     assert(p2(1) == 220)
   }
 
+  /** Publish composite `value` blocks as item-tree int16 GeoTIFFs and
+    * render each (cube, tile, period) item's quicklook from its B8A, B04,
+    * B04 band files, as the item commit does: the PNGs, in item order.
+    */
+  private def quicklooks(blocks: DataFrame, inMin: Double, inMax: Double,
+                         maxRows: Int = 768): Seq[Array[Byte]] = {
+    val dir = java.nio.file.Files.createTempDirectory("ql_items")
+    try {
+      graft.sources.RasterIO.writeGeoTiffs(
+        blocks.select(col("cube"), col("tileId"), col("p_start"), col("band"),
+          col("blockY"), col("blockX"), col("height"), col("width"),
+          lit(0.0).as("x0"), lit(0.0).as("y0"), lit(10.0).as("resX"),
+          lit(10.0).as("resY"), col("nodata"), col("value").as("pixels")),
+        dir.toString, _ => "int16", periodCols = Seq("p_start"),
+        itemTree = true)
+      val items = {
+        val s = java.nio.file.Files.walk(dir, 3)
+        try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+          .filter(p => dir.relativize(p).getNameCount == 3).sortBy(_.toString)
+        finally s.close()
+      }
+      items.toSeq.flatMap { item =>
+        val Seq(cube, tile, period) =
+          (0 until 3).map(dir.relativize(item).getName(_).toString)
+        graft.cube.Publish.renderQuicklook(Seq("B8A", "B04", "B04")
+          .map(b => item.resolve(s"${cube}_${tile}_${b}_$period.tif")),
+          inMin, inMax, maxRows)
+      }
+    } finally graft.core.Fs.deleteTree(dir)
+  }
+
   test("quicklook renders a PNG per (tile, period)") {
-    val collQl = coll.copy(quicklook = Seq("B8A", "B04", "B04"))
-    val ql = CubeBuilder.quicklook(composited, collQl, 0, 1000).collect()
+    val ql = quicklooks(composited, 0, 1000)
     assert(ql.length == 2)
-    val png = ql.head.getAs[Array[Byte]]("png")
+    val png = ql.head
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
     assert(img.getWidth == 2 && img.getHeight == 2)
   }
@@ -225,11 +255,9 @@ class CubeBuilderSpec extends SparkSpec {
     }
     val composited = rows.toDF("cube", "tileId", "p_start", "p_end",
       "blockY", "blockX", "height", "width", "band", "nodata", "value")
-    val collQl = coll.copy(quicklook = Seq("B8A", "B04", "B04"))
-    val ql = CubeBuilder.quicklook(composited, collQl, 0, 1000, maxRows = 400)
-      .collect()
+    val ql = quicklooks(composited, 0, 1000, maxRows = 400)
     assert(ql.length == 1)
-    val png = ql.head.getAs[Array[Byte]]("png")
+    val png = ql.head
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
     assert(img.getHeight == 400 && img.getWidth == 300)
     def lum(v: Int): Int = ((v.toDouble / 1000.0) * 255.0).toInt // P3 + int trunc
@@ -251,22 +279,39 @@ class CubeBuilderSpec extends SparkSpec {
       ("c1", "t1", d1, d2, 0, 0, 2, 2, "B8A", -9999, Array(100, 200, 300, 400)),
       ("c1", "t1", d1, d2, 0, 0, 2, 2, "B04", -9999, Array(10, 20, 30, 40)),
       // block (0,1): the B8A scene file is absent from the archive —
-      // the pivot yields a null struct, which must drop, not NPE
+      // its tile is outside the B8A file's grid, which must render
+      // transparent, not fail
       ("c1", "t1", d1, d2, 0, 1, 2, 2, "B04", -9999, Array(50, 60, 70, 80)))
       .toDF("cube", "tileId", "p_start", "p_end", "blockY", "blockX",
         "height", "width", "band", "nodata", "value")
-    val collQl = coll.copy(quicklook = Seq("B8A", "B04", "B04"))
-    val ql = CubeBuilder.quicklook(rows, collQl, 0, 1000).collect()
+    val ql = quicklooks(rows, 0, 1000)
     assert(ql.length == 1, "item still renders from its complete block")
     val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(ql.head.getAs[Array[Byte]]("png")))
+      new java.io.ByteArrayInputStream(ql.head))
     assert(img.getWidth == 4 && img.getHeight == 2)
     assert(((img.getRGB(0, 0) >>> 24) & 0xff) == 255, "complete block opaque")
     assert(((img.getRGB(2, 0) >>> 24) & 0xff) == 0,
       "missing-band block renders transparent, not garbage")
     // a band absent from the whole item → no quicklook row, no failure
-    assert(CubeBuilder.quicklook(rows.filter($"band" === "B04"),
-      collQl, 0, 1000).count() == 0)
+    assert(quicklooks(rows.filter($"band" === "B04"), 0, 1000).isEmpty)
+  }
+
+  test("quicklook leaves a band file's sparse tile transparent") {
+    import spark.implicits._
+    val d1 = java.sql.Date.valueOf("2020-01-01")
+    // B8A lacks block (0,1) between two present blocks: its file carries
+    // a sparse tile there, where B04 has data
+    val rows = (for (bx <- 0 to 2; band <- Seq("B8A", "B04")
+                     if !(band == "B8A" && bx == 1))
+      yield ("c1", "t1", d1, 0, bx, 2, 2, band, -9999, Array(10, 20, 30, 40)))
+      .toDF("cube", "tileId", "p_start", "blockY", "blockX", "height",
+        "width", "band", "nodata", "value")
+    val Seq(png) = quicklooks(rows, 0, 1000)
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
+    assert(img.getWidth == 6 && img.getHeight == 2)
+    def alpha(x: Int) = (img.getRGB(x, 0) >>> 24) & 0xff
+    assert(alpha(0) == 255 && alpha(4) == 255, "complete blocks opaque")
+    assert(alpha(2) == 0 && alpha(3) == 0, "sparse tile transparent")
   }
 
   test("S12 rgbComposite packs full-res ARGB with the exact P3 channel " +

@@ -487,6 +487,36 @@ class CubeRunSpec extends SparkSpec {
     }, "work root must be emptied after the commit")
   }
 
+  test("publishCogs writes each band COG in its declared data type: a " +
+       "uint16 sample above 32767 decodes unchanged") {
+    val sceneDir = java.nio.file.Files.createTempDirectory("u16_scenes")
+    val outDir = java.nio.file.Files.createTempDirectory("u16_out").toString
+    val w = 32; val h = 32
+    for (band <- Seq("B04", "QA")) {
+      val isQa = band == "QA"
+      val px = Array.tabulate(w * h)(i => if (isQa) 0 else 40000 + i)
+      val bytes = GeoTiff.write(px, w, h, tileSize = 32,
+        sampleFormat = if (isQa) 2 else 1,
+        originX = 0, originY = 320, scaleX = 10, scaleY = 10,
+        nodata = if (isQa) 255 else 0)
+      java.nio.file.Files.write(sceneDir.resolve(s"S_T9_20200105_$band.tif"),
+        bytes)
+    }
+    val u16 = coll.copy(bands = Seq(Band("B04", "red", "uint16", 0),
+      Band("QA", "quality", "uint8", 255)))
+    val r = CubeRun.runTiles(spark, u16, mask, sceneDir.toString, outDir,
+      java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 16),
+      tiles = Tiles.Fixed("t9"), blockSize = 32, publishCogs = true)
+    assert(r.items == 1 && r.errors == 0)
+    val cog = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(outDir,
+      "data", u16.identifier, "t9", "2020-01-01",
+      s"${u16.identifier}_t9_B04_2020-01-01.tif"))
+    val info = GeoTiff.readInfo(cog)
+    assert(info.bitsPerSample == 16 && info.sampleFormat == 1)
+    assert(GeoTiff.readWindow(cog, info, 0, 0, h, w).toSeq ==
+      Seq.tabulate(w * h)(40000 + _))
+  }
+
   test("runTiles: one declarative chain carries many tiles; a dropped-in " +
        "tile backfills alone") {
     val sceneDir = java.nio.file.Files.createTempDirectory("mt_scenes")

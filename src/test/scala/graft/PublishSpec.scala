@@ -83,7 +83,7 @@ class PublishSpec extends SparkSpec {
         -9999, Array(5, 6, 7, 8)))
       .toDF("cube", "tileId", "p_start", "band", "blockY", "blockX", "height",
         "width", "x0", "y0", "resX", "resY", "nodata", "pixels")
-    val moved = Publish.publishGeoTiffs(blocks, work, data)
+    val moved = Publish.publishGeoTiffs(blocks, work, data, _ => "int16")
     assert(moved.size == 2)
     // work dir drained; data dir holds decodable GeoTIFFs
     assert(!Files.exists(Paths.get(work)) ||
@@ -109,7 +109,7 @@ class PublishSpec extends SparkSpec {
       10.0, -9999, Array(1, 2, 3, 4)))
       .toDF("cube", "tileId", "p_start", "band", "blockY", "blockX", "height",
         "width", "x0", "y0", "resX", "resY", "nodata", "pixels")
-    val moved = Publish.publishGeoTiffs(blocks, work, data)
+    val moved = Publish.publishGeoTiffs(blocks, work, data, _ => "int16")
     assert(moved.size == 4)
     // per-item directories: each (cube, tile, period) owns its own subtree
     for (tile <- Seq("t1", "t2"); band <- Seq("B04", "B8A"))
@@ -120,7 +120,7 @@ class PublishSpec extends SparkSpec {
     // a later item's work dir re-stages and commits without touching the
     // first item (idempotent per-item re-publish)
     val again = Publish.publishGeoTiffs(blocks.filter($"tileId" === "t2"),
-      work, data)
+      work, data, _ => "int16")
     assert(again.size == 2 && again.forall(_.toString.contains("/t2/")))
   }
 }

@@ -50,7 +50,7 @@ class RasterIOSpec extends SparkSpec {
       .toDF("cube", "tileId", "band", "date", "blockY", "blockX", "height",
         "width", "x0", "y0", "resX", "resY", "nodata", "pixels")
     intercept[org.apache.spark.SparkException] {
-      RasterIO.writeGeoTiffs(rows, out)
+      RasterIO.writeGeoTiffs(rows, out, _ => "int16")
     }
     import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
@@ -119,6 +119,33 @@ class RasterIOSpec extends SparkSpec {
     for (r <- 0 until 32; c <- 0 until 32)
       assert(got(r * 32 + c) == px(r * 64 + c))
     assert(b00.getAs[Double]("y0") == 640.0)
+  }
+
+  test("stream writer: each declared data type round-trips its range; a " +
+       "sample outside it fails the write") {
+    import graft.sources.{GeoTiffStreamWriter, SampleOutOfRange}
+    val dir = java.nio.file.Files.createTempDirectory("dtypes")
+    for ((t, lo, hi) <- Seq(("uint8", 0, 255), ("int16", -32768, 32767),
+         ("uint16", 0, 65535), ("int32", Int.MinValue, Int.MaxValue))) {
+      val (bits, format) = GeoTiffStreamWriter.sampleLayout(t)
+      val out = dir.resolve(s"$t.tif")
+      val w = new GeoTiffStreamWriter(out, 2, 2, bitsPerSample = bits,
+        sampleFormat = format)
+      w.writeBlock(0, 0, 2, 2, Array(lo, hi, lo, hi))
+      w.close(0.0, 20.0, 10.0, 10.0)
+      val bytes = java.nio.file.Files.readAllBytes(out)
+      assert(GeoTiff.readWindow(bytes, GeoTiff.readInfo(bytes), 0, 0, 2, 2)
+        .toSeq == Seq(lo, hi, lo, hi), t)
+      if (t != "int32") {
+        val bad = new GeoTiffStreamWriter(dir.resolve(s"bad_$t.tif"), 2, 2,
+          bitsPerSample = bits, sampleFormat = format)
+        intercept[SampleOutOfRange](bad.writeBlock(0, 0, 2, 2,
+          Array(lo, hi + 1, lo, hi)))
+        bad.dispose()
+      }
+    }
+    intercept[IllegalArgumentException](
+      GeoTiffStreamWriter.sampleLayout("float32"))
   }
 
   test("internal mask: 1-bit mask subIFDs per level, bits track validity") {
@@ -244,7 +271,7 @@ class RasterIOSpec extends SparkSpec {
     val blocks = RasterIO.failOnDecodeError(RasterIO.decodeBlocksQuarantining(
       RasterIO.scanDirectory(spark, dir.toString).withColumn("tile", lit("t1")),
       "c1", blockSize = 32))
-    RasterIO.writeGeoTiffs(blocks, outDir.toString)
+    RasterIO.writeGeoTiffs(blocks, outDir.toString, _ => "int16")
     val written = java.nio.file.Files.list(outDir).iterator()
     assert(written.hasNext)
     val f = java.nio.file.Files.readAllBytes(
