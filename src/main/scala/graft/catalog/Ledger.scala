@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Run-ledger + idempotent-resume orchestration (SURVEY §2.5 C1/C4,
   * §4 "merge result caching"; reference `models/activity.py`,
@@ -18,6 +19,11 @@ object Ledger {
   val StatusCreated = "CREATED"
   val StatusSuccess = "SUCCESS"
   val StatusError = "ERROR"
+
+  /** The ledger's six columns; periods are ISO date strings. */
+  val Schema: StructType = StructType(
+    Seq("cube", "tile_id", "p_start", "p_end", "band", "status")
+      .map(StructField(_, StringType)))
 
   /** Expected work units: tiles × periods × bands. */
   def expectedUnits(tiles: DataFrame, periods: DataFrame,
@@ -200,15 +206,21 @@ object Ledger {
     * with NO `_current` pointer but flat parquet files at top level is
     * the legacy (pre-pointer-versioning) layout: read those files
     * directly — the next [[commitVersion]] migrates the dir (new
-    * version + pointer, legacy files swept).
+    * version + pointer, legacy files swept). A caller that knows the
+    * table's columns passes `schema`, and the read runs no
+    * schema-inference job; without it, a table written under another
+    * layout still fails a later `unionByName` loudly.
     */
-  def readCurrent(spark: SparkSession, dir: String): Option[DataFrame] =
-    currentVersion(dir).map(v => spark.read.parquet(s"$dir/$v"))
+  def readCurrent(spark: SparkSession, dir: String,
+                  schema: Option[StructType] = None): Option[DataFrame] = {
+    val reader = schema.foldLeft(spark.read)(_.schema(_))
+    currentVersion(dir).map(v => reader.parquet(s"$dir/$v"))
       .orElse {
         val legacy = legacyDataFiles(dir)
         if (legacy.isEmpty) None
-        else Some(spark.read.parquet(legacy.map(_.toString): _*))
+        else Some(reader.parquet(legacy.map(_.toString): _*))
       }
+  }
 
   /** C3 — per-tile summary with missing periods as a set difference. */
   def summarize(ledger: DataFrame, periods: DataFrame): DataFrame = {

@@ -52,6 +52,27 @@ object Fs {
     commitStagedTemp(tmp, dest)
   }
 
+  /** A new directory under `java.io.tmpdir` that is deleted with
+    * [[deleteTree]] when the JVM exits. For callers that return a lazy
+    * frame over the directory and so cannot delete it in a `finally`;
+    * one shutdown hook serves every such directory.
+    */
+  def tempDirDeletedAtExit(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    deletedAtExit.add(dir)
+    dir
+  }
+
+  private lazy val deletedAtExit = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      dirs.forEach { d =>
+        try deleteTree(d)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }))
+    dirs
+  }
+
   /** Delete `root` and everything under it, deepest first; a missing
     * root is a no-op.
     */

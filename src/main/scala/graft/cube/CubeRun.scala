@@ -2,6 +2,7 @@ package graft.cube
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.catalog.Ledger
 import graft.model.{Collection, MaskDef}
 import graft.sources.RasterIO
@@ -214,6 +215,11 @@ object CubeRun {
     // the fallback then sorts the rest of the task's input, which spills.
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       graft.operators.Scale.CompositeAggInFlightBuffers.toString)
+    // The run's `file:` writes set permissions without forking `chmod`
+    // (graft.core.LocalFs says why the cache must be off). Both keys reach
+    // executor tasks through the write jobs' Hadoop conf.
+    spark.conf.set("fs.file.impl", classOf[graft.core.LocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
     import spark.implicits._
 
     // with a horizon (streaming ingestion), only CLOSED periods are
@@ -234,9 +240,11 @@ object CubeRun {
     // fully-written snapshot, so a crash anywhere in publication leaves
     // readers consistent and the resume re-plans from the last commit
     val ledgerPath = s"$outDir/ledger"
-    val ledger = stage(spark, "plan")(Ledger.readCurrent(spark, ledgerPath)).getOrElse(
-      spark.emptyDataset[(String, String, String, String, String, String)]
-        .toDF("cube", "tile_id", "p_start", "p_end", "band", "status"))
+    // its columns are known, so the read infers no schema (no job)
+    val ledger = Ledger.readCurrent(spark, ledgerPath, Some(Ledger.Schema))
+      .getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        Ledger.Schema))
 
     // the scan is filename metadata only — safe to take before planning;
     // with a tile pattern the scanned directory also DEFINES the tile
@@ -490,11 +498,19 @@ object CubeRun {
       // crash-resume REPLACES its partitions instead of appending
       // duplicates, and untouched partitions survive — publication is
       // idempotent at the unit grain the ledger plans
-      stage(spark, "composite+publish:blocks")(
+      val blocksOut =
         composited.withColumn("value", CubeBuilder.compositeBand(collection))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      // what a read of the blocks table returns: the write's data columns,
+      // then the partition columns as strings (partition type inference is
+      // off). Read-backs pass it, so they run no schema-inference job.
+      val partCols = Seq("tileId", "p_start")
+      val blocksSchema = StructType(
+        blocksOut.schema.filterNot(f => partCols.contains(f.name)) ++
+          partCols.map(StructField(_, StringType)))
+      stage(spark, "composite+publish:blocks")(
+        blocksOut.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
           .options(graft.operators.Scale.BlockParquetOptions)
-          .partitionBy("tileId", "p_start")
+          .partitionBy(partCols: _*)
           .parquet(s"$outDir/blocks"))
       // The merge→composite chain executes exactly ONCE per run — the
       // blocks write above. Every later publication stage (index bands,
@@ -561,7 +577,7 @@ object CubeRun {
       // read-back closes
       val pubSource: DataFrame =
         if (pairDirs.isEmpty) composited
-        else spark.read.option("basePath", blocksBase)
+        else spark.read.schema(blocksSchema).option("basePath", blocksBase)
           .parquet(pairDirs.map(_.toString).toSeq: _*)
           .withColumn("p_start", $"p_start".cast("date"))
       val indexDf = CubeBuilder.indexBands(pubSource, collection)
@@ -670,9 +686,12 @@ object CubeRun {
       stage(spark, "publish:ledger")(
         Ledger.commitVersion(spark, ledgerPath, Ledger.upsert(ledger, completions)))
 
+      // a count reads no columns: both reads take the known schemas
       stage(spark, "readback")(RunResult(plannedCount,
-        Ledger.readCurrent(spark, s"$outDir/items").map(_.count()).getOrElse(0L),
-        readParquetIfExists(spark, s"$outDir/blocks").map(_.count()).getOrElse(0L),
+        Ledger.readCurrent(spark, itemsPath, Some(items.schema))
+          .map(_.count()).getOrElse(0L),
+        readParquetIfExists(spark, blocksBase, blocksSchema)
+          .map(_.count()).getOrElse(0L),
         errorCount))
     } finally {
       pending.unpersist()
@@ -752,10 +771,12 @@ object CubeRun {
       radsatMerged, periodsDf, collection, mask, priority = prioCol)
   }
 
-  /** None when absent OR unreadable (e.g. a zero-partition first write
-    * left a directory with no schema to infer). */
-  private def readParquetIfExists(spark: SparkSession, path: String): Option[DataFrame] =
+  /** None when absent. With its schema given, the read touches no file
+    * until an action runs, so a zero-partition first write (a directory
+    * with no parquet to infer from) reads as empty. */
+  private def readParquetIfExists(spark: SparkSession, path: String,
+                                  schema: StructType): Option[DataFrame] =
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-      scala.util.Try(spark.read.parquet(path)).toOption
+      Some(spark.read.schema(schema).parquet(path))
     else None
 }

@@ -1145,7 +1145,7 @@ object Analytics {
     // through, gated on the merged aggregate.
     "c25_schema_evolution" -> ((s, d) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_evo").toString
+      val tmp = graft.core.Fs.tempDirDeletedAtExit("graft_evo").toString
       val docs = documents(s, d)
       docs.filter($"doc_id" % 2 === 0)
         .select($"doc_id", $"lang", $"n_chars")
@@ -1605,7 +1605,7 @@ object Analytics {
     // partitions' files).
     "s_partitioned_prune" -> ((s, d) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
+      val tmp = graft.core.Fs.tempDirDeletedAtExit("graft_part").toString
       documents(s, d).select($"doc_id", $"source", $"n_chars", $"lang")
         .write.mode("overwrite").partitionBy("lang").parquet(tmp)
       s.read.parquet(tmp)
@@ -1621,7 +1621,7 @@ object Analytics {
     // original. Explicit read schema (no inference pass over the data).
     "s_csv_roundtrip" -> ((s, d) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+      val tmp = graft.core.Fs.tempDirDeletedAtExit("graft_csv").toString
       documents(s, d).select($"doc_id", $"lang", $"text")
         .write.mode("overwrite").option("header", "true")
         .option("escape", "\"")
@@ -1642,7 +1642,7 @@ object Analytics {
     // the text per source exactly like the CSV gate.
     "s_jsonl_roundtrip" -> ((s, d) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+      val tmp = graft.core.Fs.tempDirDeletedAtExit("graft_jsonl").toString
       documents(s, d).select($"doc_id", $"source", $"text")
         .write.mode("overwrite").json(tmp)
       s.read

@@ -38,14 +38,7 @@ object CubeOps {
   private def bucketedPair(s: SparkSession, d: String): (String, String) =
     bucketedTables.computeIfAbsent(d, _ => {
       import graft.operators.Scale
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(del))
-          f.delete(): Unit
-        }
-        del(tmp.toFile)
-      }))
+      val tmp = graft.core.Fs.tempDirDeletedAtExit("graft-bucketed")
       val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       val ordersTable = s"g_orders_b_$suffix"
       val custTable = s"g_cust_b_$suffix"

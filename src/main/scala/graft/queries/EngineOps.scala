@@ -329,7 +329,7 @@ object EngineOps {
     // spark.read.format("stac") with collection/date/bbox/cloud pushdown
     "s1_stac_search" -> ((s, d) => {
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("stac_q").toFile
+      val dir = graft.core.Fs.tempDirDeletedAtExit("stac_q").toFile
       def item(id: Int): String = {
         val cloud = (id * 7) % 100
         val x0 = (id % 5) * 10
@@ -365,7 +365,7 @@ object EngineOps {
     // pixel sums pin the codec end to end
     "s_raster_roundtrip" -> ((s, d) => {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_rt").toString
+      val tmp = graft.core.Fs.tempDirDeletedAtExit("graft_rt").toString
       val date = java.sql.Date.valueOf("2020-01-05")
       val blocks = (for {
         (by, bx, h, w) <- graft.raster.Raster.blockWindows(48, 48, 32)
@@ -415,8 +415,8 @@ object EngineOps {
     // recomputes the block pixel sums in closed form.
     "e2e_cube_run" -> ((s, d) => {
       import s.implicits._
-      val sceneDir = java.nio.file.Files.createTempDirectory("graft_e2e").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft_e2e_out").toString
+      val sceneDir = graft.core.Fs.tempDirDeletedAtExit("graft_e2e").toString
+      val outDir = graft.core.Fs.tempDirDeletedAtExit("graft_e2e_out").toString
       val w = 32; val h = 32
       for ((date, seed) <- Seq(("20200105", 1), ("20200120", 2));
            band <- Seq("B04", "B8A", "QA")) {

@@ -517,6 +517,94 @@ class CubeRunSpec extends SparkSpec {
       Seq.tabulate(w * h)(40000 + _))
   }
 
+  test("a run's writes fork no process, keep the stock permission modes, " +
+       "and leave the caller's file: filesystem stock") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val sceneDir = Files.createTempDirectory("nofork_scenes")
+    val outDir = Files.createTempDirectory("nofork_out").toString
+    val w = 32; val h = 32
+    for ((date, seed) <- Seq(("20200105", 1), ("20200120", 2));
+         band <- Seq("B04", "B8A", "QA")) {
+      val isQa = band == "QA"
+      val px = Array.tabulate(w * h)(i =>
+        if (isQa) 0 else 100 + (i * 7 + seed * 13) % 900)
+      Files.write(sceneDir.resolve(s"S_T9_${date}_$band.tif"),
+        GeoTiff.write(px, w, h, tileSize = 32, originX = 0, originY = 320,
+          scaleX = 10, scaleY = 10, nodata = if (isQa) 255 else nodata))
+    }
+    val withNdvi = coll.copy(
+      bands = coll.bands :+ Band("NDVI", "ndvi", "int16", nodata,
+        expression = "10000.*((B8A-B04)/(B8A+B04))"),
+      quicklook = Seq("B04", "B8A", "B04"))
+    // the class Hadoop resolves for the caller's `file:` scheme (with
+    // Hive on the classpath it can be Hive's ProxyLocalFileSystem)
+    def callerFs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sessionState.newHadoopConf())
+      .getClass
+    val callerFsBefore = callerFs
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val r =
+      try CubeRun.runTiles(spark, withNdvi, mask, sceneDir.toString, outDir,
+        java.time.LocalDate.of(2020, 1, 1), java.time.LocalDate.of(2020, 1, 31),
+        tiles = Tiles.Fixed("t9"), blockSize = 32, publishCogs = true,
+        quicklookRange = Some((0.0, 1000.0)))
+      finally rec.stop()
+    val jfr = Files.createTempFile("nofork", ".jfr")
+    val commands =
+      try {
+        rec.dump(jfr)
+        jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(_.getString("command")).toList
+      } finally { rec.close(); Files.deleteIfExists(jfr): Unit }
+    assert(r.items == 2 && r.blocks == 4)
+    val mine = commands.filter(_.contains(outDir))
+    assert(mine.isEmpty,
+      s"${mine.size} process starts named the run's outDir: ${mine.take(3)}")
+
+    // the stock LocalFileSystem's modes, per kind of entry, from a
+    // partitioned parquet write of the caller's session
+    val ref = Files.createTempDirectory("nofork_ref")
+    spark.range(4).selectExpr("id", "id % 2 AS k").write
+      .partitionBy("k").parquet(ref.resolve("t").toString)
+    def entries(root: Path): List[Path] = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    def modesByKind(ps: Seq[Path]): Map[Boolean, Set[String]] =
+      ps.groupBy(Files.isDirectory(_)).map { case (dir, xs) =>
+        dir -> xs.map(p => java.nio.file.attribute.PosixFilePermissions
+          .toString(Files.getPosixFilePermissions(p))).toSet
+      }
+    val stock = modesByKind(entries(ref.resolve("t")))
+    assert(stock.keySet == Set(true, false) && stock.values.forall(_.size == 1),
+      s"stock modes: $stock")
+    // the ledger's pointer files and the catalog roots are created through
+    // java.nio, not Hadoop; everything else under the four tables is a
+    // Hadoop write of the run
+    val written = Seq("blocks", "index_blocks", "items", "ledger").flatMap { t =>
+      val root = java.nio.file.Paths.get(outDir, t)
+      val es = entries(root).filterNot { p =>
+        val n = p.getFileName.toString
+        n == "_current" || n.startsWith(".claim_") ||
+          (p == root && Set("items", "ledger")(t))
+      }
+      assert(es.exists(_.getFileName.toString.endsWith(".parquet.crc")),
+        s"$t holds no checksummed parquet file")
+      es
+    }
+    for ((isDir, modes) <- modesByKind(written))
+      assert(modes == stock(isDir),
+        s"${if (isDir) "directory" else "file"} modes $modes, stock ${stock(isDir)}")
+
+    assert(callerFs == callerFsBefore && callerFs != classOf[graft.core.LocalFs])
+    Seq(sceneDir, java.nio.file.Paths.get(outDir), ref)
+      .foreach(graft.core.Fs.deleteTree)
+  }
+
   test("runTiles: one declarative chain carries many tiles; a dropped-in " +
        "tile backfills alone") {
     val sceneDir = java.nio.file.Files.createTempDirectory("mt_scenes")
